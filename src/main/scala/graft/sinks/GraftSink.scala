@@ -1,7 +1,9 @@
 package graft.sinks
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.util.LongAccumulator
 
 /** DataFrame-level sink facade: the user-facing assembly of the
   * pipeline the reference builds by hand (batch → serialize → append
@@ -15,6 +17,12 @@ object GraftSink {
     * survive task retries per Spark's accumulator semantics for
     * actions). */
   final case class Totals(batches: Long, bytes: Long, splits: Long, retries: Long, rows: Long)
+
+  /** One key's pending rows and their byte count. */
+  private final class StreamBuffer(val stream: String) {
+    val rows = mutable.ArrayBuffer.empty[Array[Byte]]
+    var bytes = 0L
+  }
 
   /** At-least-once append of `df` to `transport` (rows serialized with
     * `JsonRowSerializer`), batching per partition with the greedy
@@ -35,10 +43,10 @@ object GraftSink {
       val writer = new AtLeastOnceWriter[Array[Byte]](
         transport, b => b.length.toLong, settings.maxAppendBytes,
         settings.retry.maxRetries, metrics)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      val buf = mutable.ArrayBuffer.empty[Array[Byte]]
       var bufBytes = 0L
       def flush(): Unit = if (buf.nonEmpty) {
-        writer.write(RowBatch.defaultStream(buf.toList, table))
+        writer.write(RowBatch.defaultStream(ArraySeq.unsafeWrapArray(buf.toArray), table))
         rows.add(buf.size.toLong)
         buf.clear(); bufBytes = 0
       }
@@ -79,26 +87,28 @@ object GraftSink {
       val metrics = new SinkMetrics
       val appender = new PooledStreamAppender[Array[Byte]](newWriter,
         settings.retry.maxRetries, metrics)
-      val bufs = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Array[Byte]]]
-      val bufBytes = scala.collection.mutable.Map.empty[String, Long]
-      def flush(stream: String): Unit = bufs.get(stream).filter(_.nonEmpty).foreach { b =>
-        appender.append(stream, b.toList)
+      // keyed by the key value: one lookup per row, the stream name is
+      // built once per key
+      val streams = s"${table.fullPath}/streams/"
+      val bufs = new java.util.HashMap[Any, StreamBuffer]()
+      def flush(b: StreamBuffer): Unit = if (b.rows.nonEmpty) {
+        appender.append(b.stream, ArraySeq.unsafeWrapArray(b.rows.toArray))
         batches.add(1)
-        bytes.add(bufBytes(stream))
-        rows.add(b.size.toLong)
-        b.clear(); bufBytes(stream) = 0
+        bytes.add(b.bytes)
+        rows.add(b.rows.size.toLong)
+        b.rows.clear(); b.bytes = 0
       }
       try {
         it.foreach { row =>
-          val stream = s"${table.fullPath}/streams/${row.get(keyIdx)}"
+          val key = row.get(keyIdx)
+          var b = bufs.get(key)
+          if (b == null) { b = new StreamBuffer(streams + key); bufs.put(key, b) }
           val payload = serializer.serialize(row)
-          val b = bufs.getOrElseUpdate(stream, scala.collection.mutable.ArrayBuffer.empty)
-          b += payload
-          bufBytes(stream) = bufBytes.getOrElse(stream, 0L) + payload.length
-          if (b.size >= settings.maxBatchCount ||
-              bufBytes(stream) >= settings.maxBatchBytes) flush(stream)
+          b.rows += payload
+          b.bytes += payload.length
+          if (b.rows.size >= settings.maxBatchCount || b.bytes >= settings.maxBatchBytes) flush(b)
         }
-        bufs.keys.toSeq.foreach(flush)
+        bufs.values.forEach(b => flush(b))
         retries.add(metrics.appendRetries)
         writersCreated.add(appender.pool.createdCount)
       } finally appender.close()

@@ -96,7 +96,7 @@ class AsyncBatchWriter[A](transport: Seq[A] => Unit, settings: WriterSettings,
         override def run(): Unit =
           try {
             RetryPolicy.withRetries(settings.retry.maxRetries, metrics)(() => transport(batch))
-            metrics.batchCount += 1
+            metrics.addBatch(0L)
           } finally inFlight.release()
       }))
       b = buffer.poll()

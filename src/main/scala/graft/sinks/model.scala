@@ -1,5 +1,7 @@
 package graft.sinks
 
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+
 /** Destination-table coordinates, mirroring the reference's
   * `TableId`/`TableName` usage (model/Rows.java:24-28): a batch is
   * always bound to a table and a write stream name. */
@@ -50,11 +52,25 @@ case class StreamState(name: String, offset: Long, lastUpdateMillis: Long) {
 
 /** Reference metric surface (metric/BigQueryStreamMetrics.java) as a
   * plain value the writers update; wire to Spark accumulators or a
-  * metrics registry at the edge. */
+  * metrics registry at the edge. Counters are `LongAdder`s: the async
+  * writer and the retry loop bump them from pool threads, where a
+  * read-modify-write of a plain field loses updates. */
 final class SinkMetrics extends Serializable {
-  @volatile var streamOffset: Long = 0
-  @volatile var batchCount: Long = 0
-  @volatile var batchSizeBytes: Long = 0
-  @volatile var splitBatchCount: Long = 0
-  @volatile var appendRetries: Long = 0
+  private val offset = new AtomicLong
+  private val batches = new LongAdder
+  private val bytes = new LongAdder
+  private val splits = new LongAdder
+  private val retries = new LongAdder
+
+  def streamOffset: Long = offset.get
+  def batchCount: Long = batches.sum
+  def batchSizeBytes: Long = bytes.sum
+  def splitBatchCount: Long = splits.sum
+  def appendRetries: Long = retries.sum
+
+  def setStreamOffset(o: Long): Unit = offset.set(o)
+  /** One append delivered `sizeBytes` bytes. */
+  def addBatch(sizeBytes: Long): Unit = { batches.increment(); bytes.add(sizeBytes) }
+  def addSplit(): Unit = splits.increment()
+  def addRetry(): Unit = retries.increment()
 }

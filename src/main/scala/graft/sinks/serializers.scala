@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 /** Row-to-bytes serializers — the Spark re-expression of
   * serializer/RowValueSerializer.java (+ Json/Proto variants). The
@@ -21,45 +22,50 @@ class NoOpRowSerializer extends RowValueSerializer[Array[Byte]] {
 }
 
 /** JSON per-row encoding (JsonRowValueSerializer analog): field order
-  * follows the schema; nulls omitted like Spark's `to_json`. */
+  * follows the schema; nulls omitted like Spark's `to_json`. Names and
+  * strings go through the shared [[JsonLine]] kernel. Thread-safe: each
+  * call builds its own line, and the cached (schema, prefixes) pair is
+  * immutable, so a racing rebuild only costs the rebuild. */
 class JsonRowSerializer extends RowValueSerializer[Row] {
+  @transient @volatile private var names: (StructType, Array[String]) = _
+
+  private def prefixes(schema: StructType): Array[String] = {
+    val c = names
+    if (c != null && ((c._1 eq schema) || c._1 == schema)) c._2
+    else {
+      val built = JsonLine.fieldPrefixes(schema)
+      names = (schema, built)
+      built
+    }
+  }
+
   override def serialize(row: Row): Array[Byte] = {
-    val sb = new StringBuilder("{")
+    val prefix = prefixes(row.schema)
+    val sb = new java.lang.StringBuilder(256).append('{')
     var first = true
-    val schema = row.schema
     var i = 0
-    while (i < schema.length) {
+    while (i < prefix.length) {
       if (!row.isNullAt(i)) {
         if (!first) sb.append(',')
         first = false
-        sb.append('"').append(escape(schema(i).name)).append("\":")
+        sb.append(prefix(i))
         row.get(i) match {
-          case s: String => sb.append('"').append(escape(s)).append('"')
-          case b: Boolean => sb.append(b)
+          case s: String => JsonLine.quoteTo(sb, s)
+          case l: java.lang.Long => sb.append(l.longValue)
+          case n: java.lang.Integer => sb.append(n.intValue)
+          case b: java.lang.Boolean => sb.append(b.booleanValue)
           // bare NaN/Infinity tokens are invalid JSON — encode as null
-          case d: java.lang.Double if d.isNaN || d.isInfinite => sb.append("null")
-          case f: java.lang.Float if f.isNaN || f.isInfinite => sb.append("null")
+          case d: java.lang.Double =>
+            if (d.isNaN || d.isInfinite) sb.append("null") else sb.append(d.doubleValue)
+          case f: java.lang.Float =>
+            if (f.isNaN || f.isInfinite) sb.append("null") else sb.append(f.floatValue)
           case n: java.lang.Number => sb.append(n.toString)
-          case other => sb.append('"').append(escape(other.toString)).append('"')
+          case other => JsonLine.quoteTo(sb, other.toString)
         }
       }
       i += 1
     }
     sb.append('}').toString.getBytes(StandardCharsets.UTF_8)
-  }
-
-  private def escape(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
   }
 }
 

@@ -1,7 +1,8 @@
 package graft.sinks
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 import scala.annotation.tailrec
 import scala.util.control.NonFatal
@@ -38,10 +39,10 @@ object RetryPolicy {
             case Fatal => throw t
             case c if attempt >= maxRetries => throw t
             case Retryable =>
-              metrics.appendRetries += 1
+              metrics.addRetry()
               loop(attempt + 1)
             case RecreateWriter =>
-              metrics.appendRetries += 1
+              metrics.addRetry()
               onRecreate()
               loop(attempt + 1)
           }
@@ -63,18 +64,29 @@ class AtLeastOnceWriter[A](append: Seq[A] => Unit, sizeOf: A => Long,
                            maxAppendBytes: Long, maxRetries: Int = 3,
                            val metrics: SinkMetrics = new SinkMetrics) extends Serializable {
 
-  def write(batch: RowBatch[A]): Unit = writeData(batch.data)
+  /** Sizes are summed once into prefix sums over an indexed snapshot;
+    * every split level then reads its halves' bytes in O(1). */
+  def write(batch: RowBatch[A]): Unit = {
+    val data = batch.data match {
+      case s: IndexedSeq[A @unchecked] => s
+      case s => s.toIndexedSeq
+    }
+    val ends = new Array[Long](data.length + 1)
+    var i = 0
+    while (i < data.length) { ends(i + 1) = ends(i) + sizeOf(data(i)); i += 1 }
+    writeRange(data, ends, 0, data.length)
+  }
 
-  private def writeData(data: Seq[A]): Unit = {
-    val bytes = data.iterator.map(sizeOf).sum
-    if (data.size > 1 && bytes > maxAppendBytes) {
-      metrics.splitBatchCount += 1
-      val (a, b) = data.splitAt(data.size / 2)
-      writeData(a); writeData(b)
+  private def writeRange(data: IndexedSeq[A], ends: Array[Long], from: Int, until: Int): Unit = {
+    val bytes = ends(until) - ends(from)
+    if (until - from > 1 && bytes > maxAppendBytes) {
+      metrics.addSplit()
+      val mid = from + (until - from) / 2
+      writeRange(data, ends, from, mid); writeRange(data, ends, mid, until)
     } else {
-      RetryPolicy.withRetries(maxRetries, metrics)(() => append(data))
-      metrics.batchCount += 1
-      metrics.batchSizeBytes += bytes
+      val part = if (from == 0 && until == data.length) data else data.slice(from, until)
+      RetryPolicy.withRetries(maxRetries, metrics)(() => append(part))
+      metrics.addBatch(bytes)
     }
   }
 }
@@ -170,11 +182,15 @@ class ExactlyOnceParquetSink(basePath: String) extends Serializable {
     // Phase 1: write data under the epoch directory (overwrite-safe on
     // partial previous attempts of the SAME epoch — BigQuery analog:
     // append at a fixed offset is rejected/ignored when already there).
-    df.write.mode("overwrite").parquet(s"$basePath/epoch=$epochId")
+    // The marker's row count is observed by the write job itself, so an
+    // epoch costs one Spark job, not a second count over the batch.
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(s"$basePath/epoch=$epochId")
     // Phase 2: atomic commit marker (temp + ATOMIC_MOVE = flush offset).
     Files.createDirectories(ledgerDir)
     val tmp = ledgerDir.resolve(s".$epochId.tmp")
-    Files.writeString(tmp, String.valueOf(df.count()))
+    Files.writeString(tmp, String.valueOf(written.get("rows")))
     Files.move(tmp, ledgerDir.resolve(s"$epochId.committed"),
       StandardCopyOption.ATOMIC_MOVE)
     true

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.sinks.JsonLine
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -93,14 +95,15 @@ class GraftBqTable(schema: StructType, path: String, permissive: Boolean = false
   }
 }
 
-/** Scan builder with COLUMN PRUNING and FILTER PUSHDOWN — the two
-  * levers that matter at transport scale: pruned columns are never
-  * parsed out of the JSON payload (a 2-column projection of a wide
-  * table parses 2 fields per line, not all), and pushed predicates
-  * drop rows inside the partition reader before they reach Spark.
-  * Pushed filters are also returned as residual so Catalyst re-checks
-  * them — the parquet convention: the source is a row-skipping
-  * optimization, never the correctness authority. */
+/** Scan builder with COLUMN PRUNING and FILTER PUSHDOWN. The partition
+  * reader still parses every line whole into a JSON tree; pruning
+  * narrows what it builds from that tree (a 2-column projection of a
+  * wide table converts 2 fields per line and hands Spark 2-field rows),
+  * and pushed predicates are evaluated on the tree, dropping rows
+  * inside the reader before they reach Spark. Pushed filters are also
+  * returned as residual so Catalyst re-checks them — the parquet
+  * convention: the source is a row-skipping optimization, never the
+  * correctness authority. */
 class GraftBqScanBuilder(fullSchema: StructType, path: String, permissive: Boolean)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -230,7 +233,11 @@ class GraftBqWriterFactory(schema: StructType, path: String, queryId: String)
     new GraftBqDataWriter(schema, path, queryId, epochId, partitionId, taskId)
 }
 
-/** Task-side writer: JSON-lines into an attempt-isolated temp file. */
+/** Task-side writer: JSON-lines into an attempt-isolated temp file,
+  * encoded through the shared [[graft.sinks.JsonLine]] kernel with one
+  * reused line buffer per task. Non-finite doubles go out as the JSON
+  * strings "NaN"/"Infinity"/"-Infinity" (bare tokens are not JSON);
+  * the reader's `asDouble` parses them back exactly. */
 class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
                         epochId: Long, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
@@ -240,23 +247,28 @@ class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
   private val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
     StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   private var rows = 0L
+  private val prefix = JsonLine.fieldPrefixes(schema)
+  private val types = schema.fields.map(_.dataType)
+  private val sb = new java.lang.StringBuilder(256)
 
   override def write(record: InternalRow): Unit = {
-    val sb = new StringBuilder("{")
+    sb.setLength(0)
+    sb.append('{')
     var first = true
     var i = 0
-    while (i < schema.length) {
+    while (i < prefix.length) {
       if (!record.isNullAt(i)) {
         if (!first) sb.append(',')
         first = false
-        sb.append('"').append(schema(i).name).append("\":")
-        schema(i).dataType match {
-          case LongType => sb.append(record.getLong(i))
+        sb.append(prefix(i))
+        types(i) match {
+          case LongType | TimestampType => sb.append(record.getLong(i)) // timestamps as micros
           case IntegerType => sb.append(record.getInt(i))
-          case DoubleType => sb.append(record.getDouble(i))
+          case DoubleType =>
+            val d = record.getDouble(i)
+            if (java.lang.Double.isFinite(d)) sb.append(d) else sb.append('"').append(d).append('"')
           case BooleanType => sb.append(record.getBoolean(i))
-          case StringType => sb.append(jsonString(record.getUTF8String(i).toString))
-          case TimestampType => sb.append(record.getLong(i)) // micros
+          case StringType => JsonLine.quoteTo(sb, record.getUTF8String(i).toString)
           case other => throw new UnsupportedOperationException(s"graft-bq: $other")
         }
       }
@@ -264,20 +276,6 @@ class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
     }
     out.write(sb.append("}\n").toString)
     rows += 1
-  }
-
-  private def jsonString(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
   }
 
   override def commit(): WriterCommitMessage = {

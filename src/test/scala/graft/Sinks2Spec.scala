@@ -78,6 +78,27 @@ class ConfigSpec extends AnyFunSuite {
   }
 }
 
+class SinkMetricsConcurrencySpec extends AnyFunSuite {
+  test("async writer counts batches and retries exactly with 8 appends in flight") {
+    val batches = 3000
+    val flaky = (0 until batches).filter(_ % 7 == 3).toSet
+    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val delivered = new java.util.concurrent.atomic.LongAdder
+    val settings = WriterSettings().withMaxInFlight(8).withMaxBuffered(batches)
+    val w = new AsyncBatchWriter[Int](batch => {
+      val id = batch.head
+      // each flaky batch fails its first attempt, transiently
+      if (flaky(id) && failed.add(id)) throw RetryPolicy.RetryableException(s"flaky $id")
+      delivered.increment()
+    }, settings)
+    (0 until batches).foreach(i => w.submit(Seq(i)))
+    w.close()
+    assert(delivered.sum() == batches)
+    assert(w.metrics.batchCount == batches)
+    assert(w.metrics.appendRetries == flaky.size)
+  }
+}
+
 class ExactlyOnceStreamingSpec extends AnyFunSuite {
   test("foreachBatch + epoch ledger survives checkpoint replay without duplicates") {
     val spark = TestSpark.spark

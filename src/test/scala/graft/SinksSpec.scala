@@ -81,6 +81,48 @@ class WritersSpec extends AnyFunSuite {
     assert(sink.committedEpochs() == Set(0L, 1L))
   }
 
+  test("exactly-once sink runs one Spark job per epoch and records its row count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-eo-jobs").toString
+    val sink = new ExactlyOnceParquetSink(dir)
+    val sc = spark.sparkContext
+    val tag = "graft.test.eo-jobs"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(t => jobs.merge(t, 1, (a: Integer, b: Integer) => a + b))
+    }
+    /** Jobs `body` started: a fence job after it is seen last, so every
+      * earlier event has reached the listener once the fence has. */
+    def jobsOf(name: String)(body: => Unit): Int = {
+      sc.setLocalProperty(tag, name)
+      try body finally sc.setLocalProperty(tag, s"$name-fence")
+      spark.range(1).foreach(_ => ())
+      sc.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.containsKey(s"$name-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.containsKey(s"$name-fence"), "listener never saw the fence job")
+      jobs.getOrDefault(name, 0)
+    }
+    def marker(epoch: Long): String = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "_graft_commits", s"$epoch.committed"))
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf("e0")(assert(sink.addBatch(spark.range(0, 1000, 1, 4).toDF("id"), 0L))) == 1)
+      assert(jobsOf("e1")(assert(sink.addBatch(spark.range(0, 37, 1, 2).toDF("id"), 1L))) == 1)
+      assert(jobsOf("e2")(assert(sink.addBatch(spark.range(0, 0, 1, 1).toDF("id"), 2L))) == 1)
+      assert(jobsOf("replay")(assert(!sink.addBatch(spark.range(0, 5).toDF("id"), 0L))) == 0)
+    } finally sc.removeSparkListener(listener)
+    // batches the optimizer folds to an empty local relation still commit
+    import spark.implicits._
+    assert(sink.addBatch(Seq.empty[Long].toDF("id"), 3L))
+    assert(sink.addBatch(spark.range(0, 10).toDF("id").filter(lit(false)), 4L))
+    assert(marker(0L) == "1000" && marker(1L) == "37" && marker(2L) == "0")
+    assert(marker(3L) == "0" && marker(4L) == "0")
+    assert(sink.read(spark).count() == 1037)
+  }
+
   test("at-least-once writer splits oversized batches recursively") {
     val appended = scala.collection.mutable.Buffer[Seq[Int]]()
     val m = new SinkMetrics
