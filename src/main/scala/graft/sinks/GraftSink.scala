@@ -68,15 +68,17 @@ object GraftSink {
   /** Keyed at-least-once append: each row routes to its key's write
     * stream through the pooled writer registry — the full reference
     * pipeline (key → stream name, one live writer per stream,
-    * recreate-on-closed, per-stream batching, retry) distributed via
-    * foreachPartition. `newWriter` builds a stream's transport (a real
-    * deployment opens a gRPC append stream here). */
+    * recreate-on-closed, per-stream batching, oversized appends split as
+    * in [[writeAtLeastOnce]], retry) distributed via foreachPartition.
+    * `newWriter` builds a stream's transport (a real deployment opens a
+    * gRPC append stream here). */
   def writeKeyedAtLeastOnce(df: DataFrame, keyCol: String, table: TableRef,
                             settings: WriterSettings,
                             newWriter: String => BatchAppender[Array[Byte]]): Totals = {
     val sc = df.sparkSession.sparkContext
     val batches = sc.longAccumulator("graft.sink.batches")
     val bytes = sc.longAccumulator("graft.sink.bytes")
+    val splits = sc.longAccumulator("graft.sink.splits")
     val retries = sc.longAccumulator("graft.sink.retries")
     val writersCreated = sc.longAccumulator("graft.sink.writersCreated")
     val rows = sc.longAccumulator("graft.sink.rows")
@@ -92,9 +94,9 @@ object GraftSink {
       val streams = s"${table.fullPath}/streams/"
       val bufs = new java.util.HashMap[Any, StreamBuffer]()
       def flush(b: StreamBuffer): Unit = if (b.rows.nonEmpty) {
-        appender.append(b.stream, ArraySeq.unsafeWrapArray(b.rows.toArray))
-        batches.add(1)
-        bytes.add(b.bytes)
+        AtLeastOnceWriter.splitAppend(ArraySeq.unsafeWrapArray(b.rows.toArray),
+          (r: Array[Byte]) => r.length.toLong, settings.maxAppendBytes, metrics)(
+          part => appender.append(b.stream, part))
         rows.add(b.rows.size.toLong)
         b.rows.clear(); b.bytes = 0
       }
@@ -109,10 +111,13 @@ object GraftSink {
           if (b.rows.size >= settings.maxBatchCount || b.bytes >= settings.maxBatchBytes) flush(b)
         }
         bufs.values.forEach(b => flush(b))
+        batches.add(metrics.batchCount)
+        bytes.add(metrics.batchSizeBytes)
+        splits.add(metrics.splitBatchCount)
         retries.add(metrics.appendRetries)
         writersCreated.add(appender.pool.createdCount)
       } finally appender.close()
     }
-    Totals(batches.value, bytes.value, 0L, retries.value, rows.value)
+    Totals(batches.value, bytes.value, splits.value, retries.value, rows.value)
   }
 }

@@ -64,30 +64,39 @@ class AtLeastOnceWriter[A](append: Seq[A] => Unit, sizeOf: A => Long,
                            maxAppendBytes: Long, maxRetries: Int = 3,
                            val metrics: SinkMetrics = new SinkMetrics) extends Serializable {
 
-  /** Sizes are summed once into prefix sums over an indexed snapshot;
-    * every split level then reads its halves' bytes in O(1). */
-  def write(batch: RowBatch[A]): Unit = {
-    val data = batch.data match {
+  def write(batch: RowBatch[A]): Unit =
+    AtLeastOnceWriter.splitAppend(batch.data, sizeOf, maxAppendBytes, metrics)(
+      part => RetryPolicy.withRetries(maxRetries, metrics)(() => append(part)))
+}
+
+object AtLeastOnceWriter {
+  /** Sends `rows` through `send`, halving any run of more than one row
+    * whose bytes exceed `maxAppendBytes` (one split each) until every
+    * piece fits; each piece sent counts as one batch. Sizes are summed
+    * once into prefix sums over an indexed snapshot, so every split
+    * level reads its halves' bytes in O(1). */
+  def splitAppend[A](rows: Seq[A], sizeOf: A => Long, maxAppendBytes: Long,
+                     metrics: SinkMetrics)(send: Seq[A] => Unit): Unit = {
+    val data = rows match {
       case s: IndexedSeq[A @unchecked] => s
       case s => s.toIndexedSeq
     }
     val ends = new Array[Long](data.length + 1)
     var i = 0
     while (i < data.length) { ends(i + 1) = ends(i) + sizeOf(data(i)); i += 1 }
-    writeRange(data, ends, 0, data.length)
-  }
 
-  private def writeRange(data: IndexedSeq[A], ends: Array[Long], from: Int, until: Int): Unit = {
-    val bytes = ends(until) - ends(from)
-    if (until - from > 1 && bytes > maxAppendBytes) {
-      metrics.addSplit()
-      val mid = from + (until - from) / 2
-      writeRange(data, ends, from, mid); writeRange(data, ends, mid, until)
-    } else {
-      val part = if (from == 0 && until == data.length) data else data.slice(from, until)
-      RetryPolicy.withRetries(maxRetries, metrics)(() => append(part))
-      metrics.addBatch(bytes)
+    def sendRange(from: Int, until: Int): Unit = {
+      val bytes = ends(until) - ends(from)
+      if (until - from > 1 && bytes > maxAppendBytes) {
+        metrics.addSplit()
+        val mid = from + (until - from) / 2
+        sendRange(from, mid); sendRange(mid, until)
+      } else {
+        send(if (from == 0 && until == data.length) data else data.slice(from, until))
+        metrics.addBatch(bytes)
+      }
     }
+    sendRange(0, data.length)
   }
 }
 

@@ -6,11 +6,15 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.io.IOContext
+import com.fasterxml.jackson.core.json.UTF8StreamJsonParser
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.sinks.JsonLine
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -20,6 +24,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `format("graft-bq")` — a DataSource V2 table emulating the
@@ -34,7 +39,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - batch READ of committed data only (uncommitted/aborted task
   *    output is invisible), one input partition per committed file;
   *    micro-batch STREAMING READ consuming newly committed manifests
-  *    incrementally (offset = seen-manifest set).
+  *    incrementally (offset = high-water mark over commit-ordered
+  *    manifest names, [[GraftBqOffset]]).
   *  - mode=permissive skips corrupt lines on read; failfast (default)
   *    surfaces them.
   *
@@ -96,14 +102,14 @@ class GraftBqTable(schema: StructType, path: String, permissive: Boolean = false
 }
 
 /** Scan builder with COLUMN PRUNING and FILTER PUSHDOWN. The partition
-  * reader still parses every line whole into a JSON tree; pruning
-  * narrows what it builds from that tree (a 2-column projection of a
-  * wide table converts 2 fields per line and hands Spark 2-field rows),
-  * and pushed predicates are evaluated on the tree, dropping rows
-  * inside the reader before they reach Spark. Pushed filters are also
-  * returned as residual so Catalyst re-checks them — the parquet
-  * convention: the source is a row-skipping optimization, never the
-  * correctness authority. */
+  * reader streams each line's tokens once: pruning decides which fields
+  * it materialises (a 2-column projection of a wide table converts 2
+  * fields per line, skips the rest undecoded and hands Spark 2-field
+  * rows), and pushed predicates are evaluated on the parsed values,
+  * dropping rows inside the reader before they reach Spark. Pushed
+  * filters are also returned as residual so Catalyst re-checks them —
+  * the parquet convention: the source is a row-skipping optimization,
+  * never the correctness authority. */
 class GraftBqScanBuilder(fullSchema: StructType, path: String, permissive: Boolean)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -128,6 +134,9 @@ class GraftBqScanBuilder(fullSchema: StructType, path: String, permissive: Boole
     case _ => false
   }
   private def supportedLit(v: Any): Boolean = v match {
+    // a non-finite literal has no decimal value to compare at the source
+    case d: java.lang.Double => java.lang.Double.isFinite(d)
+    case f: java.lang.Float => java.lang.Float.isFinite(f)
     case _: java.lang.Number | _: String | _: java.lang.Boolean => true
     case _ => false
   }
@@ -278,17 +287,21 @@ class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
     rows += 1
   }
 
+  /** A task that wrote no rows commits no file: an empty file would
+    * become a committed data file and a scan task of its own. */
   override def commit(): WriterCommitMessage = {
     out.close()
-    FilesCommitMessage(Seq(tmp.toString), rows)
+    if (rows == 0) { Files.deleteIfExists(tmp); FilesCommitMessage(Nil, 0L) }
+    else FilesCommitMessage(Seq(tmp.toString), rows)
   }
   override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
   override def close(): Unit = ()
 }
 
 /** Read side: committed files only, one input partition per file.
-  * Streaming read: each micro-batch consumes the manifests that
-  * appeared since the last offset (offset = set of seen manifests). */
+  * Streaming read: each micro-batch consumes the manifests committed
+  * after the last offset, a high-water mark over manifest names
+  * ([[GraftBqOffset]]). */
 class GraftBqScan(schema: StructType, path: String, permissive: Boolean = false,
                   pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch {
@@ -398,58 +411,248 @@ object GraftBqMetrics {
   val droppedLines = new java.util.concurrent.atomic.LongAdder
 }
 
-/** `permissive` counts-and-skips unparseable lines (dropped_lines
-  * custom metric); default failfast surfaces corruption. */
+/** The one JSON parser factory every graft-bq read shares. Lines are
+  * parsed with Jackson's UTF-8 byte parser, built directly rather than
+  * through encoding detection: committed lines are UTF-8, so there is
+  * no BOM skip and no UTF-16/32 guess (a leading BOM or NUL byte is a
+  * parse error, as it was when lines were decoded to `String`s). The
+  * mapper reads the values the reader does not take from their tokens. */
+private[sources] object GraftBqJson {
+  private final class Utf8Factory extends JsonFactory {
+    override protected def _createParser(data: Array[Byte], offset: Int, len: Int,
+                                         ctxt: IOContext): JsonParser = {
+      ctxt.setEncoding(JsonEncoding.UTF8)
+      new UTF8StreamJsonParser(ctxt, _parserFeatures, null, _objectCodec,
+        _byteSymbolCanonicalizer.makeChild(_factoryFeatures), data, offset, offset + len, false)
+    }
+  }
+  val mapper = new ObjectMapper(new Utf8Factory)
+  val factory: JsonFactory = mapper.getFactory
+
+  private final val HighBits = 0x8080808080808080L
+
+  /** Eight bytes from `b(i)`, in native order: the ASCII test below asks
+    * whether any byte has its high bit set, never which one. */
+  private def word(b: Array[Byte], i: Int): Long = Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i)
+
+  /** Index of the first byte in `b(off until end)` that is not part of
+    * well-formed UTF-8, or -1. Well-formed is what the JDK decoder
+    * accepts: no overlong forms, no encoded surrogates, nothing above
+    * U+10FFFF, no truncated sequence. */
+  def malformedUtf8(b: Array[Byte], off: Int, end: Int): Int = {
+    var i = off
+    while (i < end) {
+      // eight ASCII bytes at a time
+      while (i + 8 <= end && (word(b, i) & HighBits) == 0) i += 8
+      val lead = if (i < end) b(i) & 0xFF else 0
+      if (lead < 0x80) i += 1
+      else {
+        var need = 0
+        var lo = 0x80
+        var hi = 0xBF
+        if (lead >= 0xC2 && lead <= 0xDF) need = 1
+        else if (lead >= 0xE0 && lead <= 0xEF) {
+          need = 2
+          if (lead == 0xE0) lo = 0xA0 else if (lead == 0xED) hi = 0x9F
+        } else if (lead >= 0xF0 && lead <= 0xF4) {
+          need = 3
+          if (lead == 0xF0) lo = 0x90 else if (lead == 0xF4) hi = 0x8F
+        } else return i
+        if (i + need >= end) return i
+        val c1 = b(i + 1) & 0xFF
+        if (c1 < lo || c1 > hi) return i
+        var k = 2
+        while (k <= need) { if ((b(i + k) & 0xC0) != 0x80) return i; k += 1 }
+        i += need + 1
+      }
+    }
+    -1
+  }
+}
+
+/** Splits a byte stream at the line ends `BufferedReader.readLine`
+  * knows: `\n`, `\r\n` and a lone `\r`; a last line without one still
+  * counts. Nothing is decoded: both end bytes are ASCII and never occur
+  * inside a multi-byte UTF-8 character. After `next()` returns true the
+  * line is `buf(start until start + length)`, valid until the next call. */
+private[sources] final class ByteLines(in: java.io.InputStream) extends AutoCloseable {
+  var buf = new Array[Byte](64 * 1024)
+  var start = 0
+  var length = 0
+  private var pos = 0 // first byte not yet returned
+  private var end = 0 // end of the bytes read so far
+  private var eof = false
+  private var skipLf = false // the last line ended at '\r': a '\n' next belongs to it
+
+  def next(): Boolean = {
+    if (skipLf) {
+      if (pos == end && !eof) fill()
+      if (pos < end && buf(pos) == '\n') pos += 1
+      skipLf = false
+    }
+    var i = pos
+    while (true) {
+      while (i < end && buf(i) != '\n' && buf(i) != '\r') i += 1
+      if (i < end) {
+        start = pos; length = i - pos; pos = i + 1
+        skipLf = buf(i) == '\r'
+        return true
+      }
+      if (eof) {
+        if (pos == end) return false
+        start = pos; length = end - pos; pos = end
+        return true
+      }
+      i -= fill()
+    }
+    false
+  }
+
+  /** Moves the unreturned bytes to the front, doubles a full buffer and
+    * reads more; returns how far the bytes moved. */
+  private def fill(): Int = {
+    val shift = pos
+    if (shift > 0) {
+      System.arraycopy(buf, pos, buf, 0, end - pos)
+      end -= pos; pos = 0
+    }
+    if (end == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    val n = in.read(buf, end, buf.length - end)
+    if (n < 0) eof = true else end += n
+    shift
+  }
+
+  override def close(): Unit = in.close()
+}
+
+/** Reads one committed file: each line is parsed once, by one streaming
+  * pass of the shared byte parser, straight into a reused row. Required
+  * columns are built from their tokens; every other field is skipped
+  * without decoding its strings. A token whose JSON type matches its
+  * column (an int or long for LONG/TIMESTAMP, an int for INT, a float
+  * for DOUBLE, true/false for BOOLEAN, a string for STRING) is read as
+  * is; any other value — a string "8" in a long column, a big integer,
+  * a nested value, a field only a filter reads — is read as a JSON node
+  * and coerced by its `asLong`/`asInt`/`asDouble`/`asBoolean`/`asText`.
+  * A repeated key keeps its last value; tokens after the object are
+  * ignored; an empty line is a non-object line.
+  *
+  * `permissive` counts-and-skips corrupt lines — unparseable JSON,
+  * malformed UTF-8, a non-object root — in the dropped_lines custom
+  * metric; default failfast throws on the first. Either way every line
+  * is parsed to its end before pushed filters run, so a corrupt line is
+  * never hidden by a filter. */
 class GraftBqPartitionReader(schema: StructType, file: String, permissive: Boolean = false,
                              pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.sources._
-  private val mapper = new ObjectMapper()
-  private val lines = Files.lines(Paths.get(file))
-  private val it = lines.iterator()
-  private var current: InternalRow = _
-  private var dropped = 0L
+  import GraftBqPartitionReader._
+  import GraftBqJson.{factory, mapper}
 
-  /** Comparison against the raw JSON node. None = "cannot be decided
-    * at the source" — field missing, JSON null, or a node type that
-    * doesn't cleanly match the literal (e.g. a numeric stored as a
-    * JSON string, which [[nextFrom]] would coerce). A None KEEPS the
-    * row: the residual Catalyst filter is the correctness authority,
-    * and a skipped evaluation only costs the optimization, never a
-    * row. (Null fields pass through too — the residual's 3-valued
-    * SQL comparison drops them identically.) Strings compare as
+  private val lines = new ByteLines(Files.newInputStream(Paths.get(file)))
+  private val n = schema.length
+  private val types: Array[Int] = schema.fields.map(_.dataType match {
+    case LongType | TimestampType => TLong
+    case IntegerType => TInt
+    case DoubleType => TDouble
+    case BooleanType => TBool
+    case StringType => TString
+    case _ => TOther
+  })
+  /** Slots: the schema's columns, then the attributes only filters read. */
+  private val slotOf = new util.HashMap[String, Integer]()
+  schema.fieldNames.zipWithIndex.foreach { case (f, i) => slotOf.putIfAbsent(f, i) }
+  private val preds: Array[Pred] = pushed.flatMap {
+    case EqualTo(a, v) => Some(new Pred(OpEq, slot(a), v))
+    case GreaterThan(a, v) => Some(new Pred(OpGt, slot(a), v))
+    case GreaterThanOrEqual(a, v) => Some(new Pred(OpGe, slot(a), v))
+    case LessThan(a, v) => Some(new Pred(OpLt, slot(a), v))
+    case LessThanOrEqual(a, v) => Some(new Pred(OpLe, slot(a), v))
+    case IsNull(a) => Some(new Pred(OpIsNull, slot(a), null))
+    case IsNotNull(a) => Some(new Pred(OpIsNotNull, slot(a), null))
+    case _ => None
+  }
+  private def slot(attr: String): Int = {
+    slotOf.putIfAbsent(attr, slotOf.size)
+    slotOf.get(attr)
+  }
+  private val slots = slotOf.size
+  private val kinds = new Array[Byte](slots)
+  private val longs = new Array[Long](slots)
+  private val doubles = new Array[Double](slots)
+  private val nodes = new Array[JsonNode](slots)
+  private val unsupported = types.indices.filter(types(_) == TOther).toArray
+  private val row = new SpecificInternalRow(schema.fields.map(_.dataType).toIndexedSeq)
+  private var dropped = 0L
+  // the line being parsed
+  private var line: Array[Byte] = _
+  private var lineOff = 0
+  private var lineEnd = 0
+
+  /** A pushed filter over one slot. A comparison the source cannot
+    * decide — field missing or JSON null, or a value whose JSON type
+    * does not match the literal (a numeric stored as a string, which
+    * the row coerces) — KEEPS the row: the residual Catalyst filter is
+    * the correctness authority, and a skipped evaluation only costs the
+    * optimization, never a row. Numbers compare by decimal value (a
+    * long against an integral literal by `Long.compare`, a double
+    * against a double literal as doubles); strings as
     * UTF8String — Spark's binary code-point order, not Java UTF-16
     * code-unit order, which diverges on supplementary-plane chars. */
-  private def cmp(node: com.fasterxml.jackson.databind.JsonNode,
-                  attr: String, lit: Any): Option[Int] = {
-    val v = node.get(attr)
-    if (v == null || v.isNull) None
-    else lit match {
-      case n: java.lang.Number =>
-        if (!v.isNumber) None
-        else Some(v.decimalValue().compareTo(new java.math.BigDecimal(n.toString)))
-      case s: String =>
-        if (!v.isTextual) None
-        else Some(UTF8String.fromString(v.asText()).compareTo(UTF8String.fromString(s)))
-      case b: java.lang.Boolean =>
-        if (!v.isBoolean) None
-        else Some(java.lang.Boolean.compare(v.asBoolean(), b))
-      case _ => None
+  private final class Pred(op: Int, s: Int, lit: Any) {
+    private val integral = lit match {
+      case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte => true
+      case _ => false
+    }
+    private val litLong = if (integral) lit.asInstanceOf[java.lang.Number].longValue else 0L
+    private val finiteDouble = lit match { case d: java.lang.Double => java.lang.Double.isFinite(d); case _ => false }
+    private val litDouble = if (finiteDouble) lit.asInstanceOf[java.lang.Double].doubleValue else 0.0
+    private lazy val litDec = new java.math.BigDecimal(lit.toString)
+    private val litUtf8 = lit match { case x: String => UTF8String.fromString(x); case _ => null }
+
+    private def cmpNode(v: JsonNode): Int = lit match {
+      case _: java.lang.Number => if (v.isNumber) v.decimalValue().compareTo(litDec) else Undecided
+      case _: String =>
+        if (v.isTextual) Integer.signum(UTF8String.fromString(v.asText()).compareTo(litUtf8)) else Undecided
+      case b: java.lang.Boolean => if (v.isBoolean) java.lang.Boolean.compare(v.asBoolean(), b) else Undecided
+      case _ => Undecided
+    }
+
+    private def cmp(): Int = kinds(s) match {
+      case KAbsent | KNull => Undecided
+      case KNode => cmpNode(nodes(s))
+      case k => lit match {
+        case _: java.lang.Number =>
+          if (k == KLong) {
+            if (integral) java.lang.Long.compare(longs(s), litLong)
+            else java.math.BigDecimal.valueOf(longs(s)).compareTo(litDec)
+          } else if (k == KDouble) {
+            // finite doubles order as their decimal strings do (each string
+            // rounds back to its double), and -0.0 equals 0.0 in both
+            val d = doubles(s)
+            if (finiteDouble && java.lang.Double.isFinite(d)) { if (d < litDouble) -1 else if (d > litDouble) 1 else 0 }
+            else java.math.BigDecimal.valueOf(d).compareTo(litDec)
+          } else Undecided
+        case _: String => if (k == KStr) Integer.signum(row.getUTF8String(s).compareTo(litUtf8)) else Undecided
+        case b: java.lang.Boolean => if (k == KBool) java.lang.Boolean.compare(longs(s) != 0, b) else Undecided
+        case _ => Undecided
+      }
+    }
+
+    def test(): Boolean = op match {
+      case OpIsNull => kinds(s) <= KNull
+      case OpIsNotNull => kinds(s) > KNull
+      case _ =>
+        val c = cmp()
+        c == Undecided || (op match {
+          case OpEq => c == 0
+          case OpGt => c > 0
+          case OpGe => c >= 0
+          case OpLt => c < 0
+          case _ => c <= 0
+        })
     }
   }
-
-  private def passes(node: com.fasterxml.jackson.databind.JsonNode): Boolean =
-    pushed.forall {
-      // forall(...) on None = true: undecidable-at-source keeps the row
-      case EqualTo(a, v) => cmp(node, a, v).forall(_ == 0)
-      case GreaterThan(a, v) => cmp(node, a, v).forall(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(node, a, v).forall(_ >= 0)
-      case LessThan(a, v) => cmp(node, a, v).forall(_ < 0)
-      case LessThanOrEqual(a, v) => cmp(node, a, v).forall(_ <= 0)
-      case IsNull(a) => val x = node.get(a); x == null || x.isNull
-      case IsNotNull(a) => val x = node.get(a); x != null && !x.isNull
-      case _ => true
-    }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
@@ -459,40 +662,122 @@ class GraftBqPartitionReader(schema: StructType, file: String, permissive: Boole
 
   private def drop(): Unit = { dropped += 1; GraftBqMetrics.droppedLines.increment() }
 
-  @scala.annotation.tailrec
-  final override def next(): Boolean = {
-    if (!it.hasNext) return false
-    val line = it.next()
-    val parsed = try Some(mapper.readTree(line)) catch {
-      case e: Exception => if (permissive) None else throw e
-    }
-    parsed match {
-      case None => drop(); next()
-      case Some(node) if !node.isObject =>
-        if (permissive) { drop(); next() }
+  override def next(): Boolean = {
+    while (lines.next()) {
+      val parsed = try parse(lines.buf, lines.start, lines.start + lines.length) catch {
+        case _: Exception if permissive => Corrupt
+      }
+      if (parsed == Corrupt) drop()
+      else if (parsed == NonObject) {
+        if (permissive) drop()
         else throw new java.io.IOException(s"graft-bq: non-object JSON line in $file")
-      case Some(node) if !passes(node) => next() // pushed-filter row skip
-      case Some(node) => nextFrom(node)
-    }
-  }
-
-  private def nextFrom(node: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-    val values = schema.fields.map { f =>
-      val v = node.get(f.name)
-      if (v == null || v.isNull) null
-      else f.dataType match {
-        case LongType | TimestampType => v.asLong(): java.lang.Long
-        case IntegerType => v.asInt(): java.lang.Integer
-        case DoubleType => v.asDouble(): java.lang.Double
-        case BooleanType => v.asBoolean(): java.lang.Boolean
-        case StringType => UTF8String.fromString(v.asText())
-        case other => throw new UnsupportedOperationException(s"graft-bq: $other")
+      } else if (passes()) {
+        unsupported.foreach { i =>
+          if (kinds(i) == KNode) throw new UnsupportedOperationException(s"graft-bq: ${schema(i).dataType}")
+        }
+        return true
       }
     }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
+    false
+  }
+
+  private def passes(): Boolean = {
+    var i = 0
+    while (i < preds.length) { if (!preds(i).test()) return false; i += 1 }
     true
   }
 
-  override def get(): InternalRow = current
+  /** Parses one line into the slots and the row: [[Parsed]] for an
+    * object, [[NonObject]] for any other root; throws on corrupt input. */
+  private def parse(buf: Array[Byte], off: Int, end: Int): Int = {
+    val bad = GraftBqJson.malformedUtf8(buf, off, end)
+    if (bad >= 0) throw new java.io.CharConversionException(
+      s"graft-bq: malformed UTF-8 at byte ${bad - off} of a line in $file")
+    java.util.Arrays.fill(kinds, KAbsent)
+    var i = 0
+    while (i < n) { row.setNullAt(i); i += 1 }
+    line = buf; lineOff = off; lineEnd = end
+    val p = factory.createParser(buf, off, end - off)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) {
+        // a non-object root is still read whole: a malformed one is corrupt
+        if (p.currentToken() != null) mapper.readTree[JsonNode](p)
+        NonObject
+      } else {
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val s = slotOf.get(p.currentName())
+          val t = p.nextToken()
+          if (s == null) p.skipChildren() else read(s, t, p)
+        }
+        Parsed
+      }
+    } finally p.close()
+  }
+
+  /** A string token's value. An unescaped string is its own bytes in the
+    * line, already checked as UTF-8, so they are copied as they are and
+    * the parser skips the string undecoded; an escaped one is decoded. */
+  private def string(p: JsonParser): UTF8String = {
+    val q = lineOff + p.currentTokenLocation().getByteOffset.toInt
+    if (q < lineEnd && line(q) == '"') {
+      var i = q + 1
+      while (i < lineEnd && line(i) != '"' && line(i) != '\\') i += 1
+      if (i < lineEnd && line(i) == '"') return UTF8String.fromBytes(java.util.Arrays.copyOfRange(line, q + 1, i))
+    }
+    UTF8String.fromString(p.getText)
+  }
+
+  /** One value into slot `s` (and its column, for a schema slot). */
+  private def read(s: Int, t: JsonToken, p: JsonParser): Unit = {
+    if (t == JsonToken.VALUE_NULL) {
+      kinds(s) = KNull
+      if (s < n) row.setNullAt(s)
+      return
+    }
+    val ty = if (s < n) types(s) else TOther
+    if (ty == TLong && t == JsonToken.VALUE_NUMBER_INT && p.getNumberType != JsonParser.NumberType.BIG_INTEGER) {
+      val v = p.getLongValue
+      kinds(s) = KLong; longs(s) = v; row.setLong(s, v)
+    } else if (ty == TInt && t == JsonToken.VALUE_NUMBER_INT && p.getNumberType == JsonParser.NumberType.INT) {
+      val v = p.getIntValue
+      kinds(s) = KLong; longs(s) = v; row.setInt(s, v)
+    } else if (ty == TDouble && t == JsonToken.VALUE_NUMBER_FLOAT) {
+      val v = p.getDoubleValue
+      kinds(s) = KDouble; doubles(s) = v; row.setDouble(s, v)
+    } else if (ty == TBool && (t == JsonToken.VALUE_TRUE || t == JsonToken.VALUE_FALSE)) {
+      kinds(s) = KBool; longs(s) = if (t == JsonToken.VALUE_TRUE) 1L else 0L
+      row.setBoolean(s, t == JsonToken.VALUE_TRUE)
+    } else if (ty == TString && t == JsonToken.VALUE_STRING) {
+      kinds(s) = KStr; row.update(s, string(p))
+    } else {
+      val v = mapper.readTree[JsonNode](p)
+      kinds(s) = KNode; nodes(s) = v
+      ty match {
+        case TLong => row.setLong(s, v.asLong())
+        case TInt => row.setInt(s, v.asInt())
+        case TDouble => row.setDouble(s, v.asDouble())
+        case TBool => row.setBoolean(s, v.asBoolean())
+        case TString => row.update(s, UTF8String.fromString(v.asText()))
+        case _ => () // a filter-only slot, or a type thrown on once the row passes
+      }
+    }
+  }
+
+  override def get(): InternalRow = row
   override def close(): Unit = lines.close()
+}
+
+private object GraftBqPartitionReader {
+  // column types
+  final val TLong = 0; final val TInt = 1; final val TDouble = 2
+  final val TBool = 3; final val TString = 4; final val TOther = 5
+  // what a slot holds for the current line; KAbsent and KNull sort first
+  final val KAbsent: Byte = 0; final val KNull: Byte = 1; final val KLong: Byte = 2
+  final val KDouble: Byte = 3; final val KBool: Byte = 4; final val KStr: Byte = 5; final val KNode: Byte = 6
+  // parse outcomes
+  final val Parsed = 0; final val NonObject = 1; final val Corrupt = 2
+  // pushed filter forms
+  final val OpEq = 0; final val OpGt = 1; final val OpGe = 2; final val OpLt = 3
+  final val OpLe = 4; final val OpIsNull = 5; final val OpIsNotNull = 6
+  final val Undecided = Int.MinValue
 }

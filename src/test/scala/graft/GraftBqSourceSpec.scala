@@ -93,6 +93,39 @@ class GraftBqSourceSpec extends AnyFunSuite {
     assert(back.orderBy(back.columns.head).as[(Long, String)].collect().toSeq == Seq((1L, "x"), (2L, "y\"z")))
   }
 
+  test("tasks that write no rows commit no file; an all-empty epoch still commits its manifest") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-bq-empty").toString
+    val df = spark.range(0, 10, 1, 8).filter($"id" < 2)
+    val nonEmpty = df.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0)
+    df.write.format("graft-bq").mode("append").option("path", dir).save()
+    def manifests = Files.list(Paths.get(dir, "_committed")).iterator().asScala
+      .filterNot(_.getFileName.toString.startsWith(".")).toSeq
+    val listed = manifests.flatMap(m => Files.readAllLines(m).asScala).filter(_.nonEmpty)
+    val onDisk = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".jsonl")).toSeq
+    assert(listed.size == nonEmpty && nonEmpty == 2, s"listed $listed")
+    assert(listed.sorted == onDisk.sorted, "no unlisted or temp files left behind")
+    assert(listed.forall(f => Files.size(Paths.get(dir, f)) > 0))
+    def back = spark.read.format("graft-bq").option("path", dir).load().as[Long].collect().sorted.toSeq
+    assert(back == Seq(0L, 1L))
+
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val empty = new graft.sources.GraftBqDataWriter(schema, dir, "qempty", 5L, 0, 1L).commit()
+    assert(empty == graft.sources.FilesCommitMessage(Nil, 0L))
+    val write = new graft.sources.GraftBqWrite(schema, dir, "qempty")
+    write.commit(5L, Array(empty))
+    val epoch5 = manifests.filter(_.getFileName.toString.endsWith("-epoch-5"))
+    assert(epoch5.size == 1 && Files.size(epoch5.head) == 0)
+    // the manifest marks the epoch committed: a replay carrying rows is dropped
+    val replay = new graft.sources.GraftBqDataWriter(schema, dir, "qempty", 5L, 0, 2L)
+    replay.write(org.apache.spark.sql.catalyst.InternalRow(99L))
+    write.commit(5L, Array(replay.commit()))
+    assert(back == Seq(0L, 1L))
+  }
+
   test("pipeline integration: dedup output sinks through graft-bq") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bq4").toString
     val out = operators.Dedup.dedupExact(Tables.documents(spark, TestSpark.sf))
@@ -275,6 +308,18 @@ class GraftBqPushdownSpec extends AnyFunSuite {
     // null/missing name is UNDECIDABLE at the source for a comparison:
     // rows 2 and 4 pass through for the residual filter to drop
     assert(rows(EqualTo("name", "c"), LessThan("id", 10L)) == Seq(2L, 3L, 4L))
+  }
+
+  test("non-finite literals are left to the residual filter") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bq-nanlit").toString
+    Seq((1L, 1.5), (2L, Double.NaN), (3L, Double.PositiveInfinity)).toDF("id", "x")
+      .write.format("graft-bq").mode("append").option("path", dir).save()
+    val df = spark.read.format("graft-bq").option("path", dir).load()
+    // Spark orders NaN above every double, +Infinity included
+    assert(df.filter($"x" >= Double.NaN).as[(Long, Double)].collect().map(_._1).toSeq == Seq(2L))
+    assert(df.filter($"x" < Double.PositiveInfinity).as[(Long, Double)].collect().map(_._1).toSeq == Seq(1L))
+    assert(df.filter($"x" > Double.NegativeInfinity).count() == 3)
   }
 
   test("undecidable-at-source values pass through instead of over-dropping") {

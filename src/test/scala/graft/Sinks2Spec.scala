@@ -377,6 +377,37 @@ class KeyedSinkSpec extends AnyFunSuite {
   }
 }
 
+object KeyedSinkSpec {
+  /** Every append the keyed face made, in order: executors run in this
+    * JVM in local mode. */
+  val appended = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+}
+
+class KeyedSplitSpec extends AnyFunSuite {
+  test("keyed at-least-once splits an oversized per-stream batch recursively") {
+    val spark = TestSpark.spark
+    // eight rows of one key and one serialized length, in one partition
+    val df = spark.range(10, 18, 1, 1).selectExpr("'a' AS k", "id", "repeat('x', 20) AS v")
+    val rowBytes = new graft.sinks.JsonRowSerializer().serialize(df.head()).length.toLong
+    val newWriter: String => graft.sinks.BatchAppender[Array[Byte]] = _ =>
+      new graft.sinks.BatchAppender[Array[Byte]] {
+        override def append(rows: Seq[Array[Byte]]): Unit =
+          KeyedSinkSpec.appended.add(rows.map(new String(_, "UTF-8")))
+        override def close(): Unit = ()
+      }
+    KeyedSinkSpec.appended.clear()
+    val totals = graft.sinks.GraftSink.writeKeyedAtLeastOnce(
+      df, "k", graft.sinks.TableRef("p", "d", "t"),
+      graft.sinks.WriterSettings(maxBatchCount = 8, maxBatchBytes = 1L << 20,
+        maxAppendBytes = rowBytes * 5 / 2), newWriter)
+    import scala.jdk.CollectionConverters._
+    val appends = KeyedSinkSpec.appended.asScala.toSeq
+    assert(appends.map(_.size) == Seq(2, 2, 2, 2)) // 8 → 4+4 → 2+2+2+2
+    assert(totals.splits == 3 && totals.batches == 4 && totals.rows == 8)
+    assert(appends.flatten.map(l => l.split("\"id\":")(1).takeWhile(_.isDigit).toLong).sorted == (10L to 17L))
+  }
+}
+
 class TimeoutClampSpec extends AnyFunSuite {
   test("a key whose batch anchor lags the watermark flushes instead of crashing") {
     val spark = TestSpark.spark
