@@ -16,8 +16,9 @@ object DeliveryGuarantee extends Enumeration {
   *
   *  - ExactlyOnce → epoch-ledger parquet sink (replayed epochs no-op),
   *    the BUFFERED-stream + commit protocol analog.
-  *  - AtLeastOnce → distributed batched appends through the greedy
-  *    trigger + retry/split writer (default-stream analog).
+  *  - AtLeastOnce → [[GraftSink.writeAtLeastOnce]]: distributed
+  *    batched appends to the table's default stream, split to
+  *    `maxAppendBytes` and retried with backoff.
   */
 class GraftStreamSink private (guarantee: DeliveryGuarantee.Value,
                                table: TableRef,

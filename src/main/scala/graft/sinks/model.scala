@@ -52,9 +52,10 @@ case class StreamState(name: String, offset: Long, lastUpdateMillis: Long) {
 
 /** Reference metric surface (metric/BigQueryStreamMetrics.java) as a
   * plain value the writers update; wire to Spark accumulators or a
-  * metrics registry at the edge. Counters are `LongAdder`s: the async
-  * writer and the retry loop bump them from pool threads, where a
-  * read-modify-write of a plain field loses updates. */
+  * metrics registry at the edge. Counters are `LongAdder`s: appends
+  * that share one `SinkMetrics` (a `PooledStreamAppender` used from a
+  * thread pool) bump them concurrently, where a read-modify-write of a
+  * plain field loses updates. */
 final class SinkMetrics extends Serializable {
   private val offset = new AtomicLong
   private val batches = new LongAdder

@@ -1,14 +1,16 @@
 package graft.sinks
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.time.Duration
+
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 
 import scala.annotation.tailrec
 import scala.util.control.NonFatal
 
-/** Retry classification + bounded retry loop — the Spark analog of the
-  * reference's status-code switches (sink/defaultStream/
+/** Retry classification + bounded retry loop with backoff — the Spark
+  * analog of the reference's status-code switches (sink/defaultStream/
   * BigQueryDefaultSinkWriter.java: retry on INTERNAL/CANCELLED/ABORTED;
   * recreate on MAXIMUM_BATCHING_ERROR) and WriterRetrySettings. */
 object RetryPolicy {
@@ -26,77 +28,31 @@ object RetryPolicy {
     case _ => Fatal
   }
 
-  /** Runs `op`, retrying Retryable failures up to maxRetries, invoking
-    * `onRecreate` for recreate-writer failures (fresh writer, retry). */
-  def withRetries[T](maxRetries: Int, metrics: SinkMetrics = new SinkMetrics)(
+  /** The production sleeper: blocks the calling thread. */
+  val threadSleep: Duration => Unit = d => Thread.sleep(d.toMillis)
+
+  /** Runs `op`, retrying Retryable and writer-closed failures up to
+    * `retry.maxRetries` times; a writer-closed failure first calls
+    * `onRecreate` (fresh writer). Before retry `n` (from 0) it passes
+    * `retry.backoffFor(n)` to `sleep`, which tests replace. Fatal
+    * failures and the last failed attempt are rethrown. */
+  def withRetries[T](retry: WriterRetrySettings, metrics: SinkMetrics = new SinkMetrics,
+                     sleep: Duration => Unit = threadSleep)(
       op: () => T, onRecreate: () => Unit = () => ()): T = {
     @tailrec def loop(attempt: Int): T = {
       val r = try Right(op()) catch { case NonFatal(t) => Left(t) }
       r match {
         case Right(v) => v
         case Left(t) =>
-          classify(t) match {
-            case Fatal => throw t
-            case c if attempt >= maxRetries => throw t
-            case Retryable =>
-              metrics.addRetry()
-              loop(attempt + 1)
-            case RecreateWriter =>
-              metrics.addRetry()
-              onRecreate()
-              loop(attempt + 1)
-          }
+          val c = classify(t)
+          if (c == Fatal || attempt >= retry.maxRetries) throw t
+          metrics.addRetry()
+          if (c == RecreateWriter) onRecreate()
+          sleep(retry.backoffFor(attempt))
+          loop(attempt + 1)
       }
     }
     loop(0)
-  }
-}
-
-/** At-least-once append writer — the Spark re-expression of
-  * sink/defaultStream/BigQueryDefaultSinkWriter.java +
-  * sink/BigQuerySinkWriter.java's batch splitting: an append whose
-  * payload exceeds the API limit is halved recursively and re-appended
-  * (split_batch_count metric), transient failures retry per
-  * RetryPolicy. `append` is the pluggable transport (the tests inject
-  * failures; a real deployment would PUT to an external service).
-  */
-class AtLeastOnceWriter[A](append: Seq[A] => Unit, sizeOf: A => Long,
-                           maxAppendBytes: Long, maxRetries: Int = 3,
-                           val metrics: SinkMetrics = new SinkMetrics) extends Serializable {
-
-  def write(batch: RowBatch[A]): Unit =
-    AtLeastOnceWriter.splitAppend(batch.data, sizeOf, maxAppendBytes, metrics)(
-      part => RetryPolicy.withRetries(maxRetries, metrics)(() => append(part)))
-}
-
-object AtLeastOnceWriter {
-  /** Sends `rows` through `send`, halving any run of more than one row
-    * whose bytes exceed `maxAppendBytes` (one split each) until every
-    * piece fits; each piece sent counts as one batch. Sizes are summed
-    * once into prefix sums over an indexed snapshot, so every split
-    * level reads its halves' bytes in O(1). */
-  def splitAppend[A](rows: Seq[A], sizeOf: A => Long, maxAppendBytes: Long,
-                     metrics: SinkMetrics)(send: Seq[A] => Unit): Unit = {
-    val data = rows match {
-      case s: IndexedSeq[A @unchecked] => s
-      case s => s.toIndexedSeq
-    }
-    val ends = new Array[Long](data.length + 1)
-    var i = 0
-    while (i < data.length) { ends(i + 1) = ends(i) + sizeOf(data(i)); i += 1 }
-
-    def sendRange(from: Int, until: Int): Unit = {
-      val bytes = ends(until) - ends(from)
-      if (until - from > 1 && bytes > maxAppendBytes) {
-        metrics.addSplit()
-        val mid = from + (until - from) / 2
-        sendRange(from, mid); sendRange(mid, until)
-      } else {
-        send(if (from == 0 && until == data.length) data else data.slice(from, until))
-        metrics.addBatch(bytes)
-      }
-    }
-    sendRange(0, data.length)
   }
 }
 
@@ -141,16 +97,18 @@ class WriterPool[W <: AutoCloseable](create: String => W) extends AutoCloseable 
 
 /** Routes keyed batches to pooled per-stream writers with the full
   * retry ladder: transient failures retry in place, writer-closed
-  * failures recreate the stream's writer through the pool and retry
+  * failures recreate the stream's writer through the pool and retry,
+  * each retry after its backoff
   * (reference: BigQueryDefaultSinkWriter status switch + getWriter). */
 class PooledStreamAppender[A](newWriter: String => BatchAppender[A],
-                              maxRetries: Int = 3,
-                              val metrics: SinkMetrics = new SinkMetrics)
+                              retry: WriterRetrySettings = WriterRetrySettings(),
+                              val metrics: SinkMetrics = new SinkMetrics,
+                              sleep: Duration => Unit = RetryPolicy.threadSleep)
     extends AutoCloseable {
   val pool = new WriterPool[BatchAppender[A]](newWriter)
 
   def append(stream: String, rows: Seq[A]): Unit =
-    RetryPolicy.withRetries(maxRetries, metrics)(
+    RetryPolicy.withRetries(retry, metrics, sleep)(
       () => pool.get(stream).append(rows),
       onRecreate = () => pool.recreate(stream))
 
@@ -187,7 +145,9 @@ class ExactlyOnceParquetSink(basePath: String) extends Serializable {
   /** foreachBatch body. Returns true if the epoch was appended, false
     * if it was a replay of a committed epoch. */
   def addBatch(df: DataFrame, epochId: Long): Boolean = {
-    if (committedEpochs().contains(epochId)) return false
+    // markers are only ever written as <epoch>.committed: one lookup,
+    // however many epochs the ledger holds
+    if (Files.exists(ledgerDir.resolve(s"$epochId.committed"))) return false
     // Phase 1: write data under the epoch directory (overwrite-safe on
     // partial previous attempts of the SAME epoch — BigQuery analog:
     // append at a fixed offset is rejected/ignored when already there).

@@ -39,14 +39,6 @@ class SerializerSpec extends AnyFunSuite {
 }
 
 class ConfigSpec extends AnyFunSuite {
-  test("credentials providers resolve from json/file/default") {
-    assert(JsonCredentialsProvider("""{"k":1}""").resolve() == """{"k":1}""")
-    val f = java.nio.file.Files.createTempFile("cred", ".json")
-    java.nio.file.Files.writeString(f, "secret")
-    assert(FileCredentialsProvider(f.toString).resolve() == "secret")
-    assert(DefaultCredentials.resolve() == "")
-  }
-
   test("retry settings back off exponentially with a cap") {
     val r = WriterRetrySettings(initialBackoff = java.time.Duration.ofMillis(100),
       backoffMultiplier = 2.0, maxBackoff = java.time.Duration.ofMillis(350))
@@ -54,48 +46,76 @@ class ConfigSpec extends AnyFunSuite {
     assert(r.backoffFor(1).toMillis == 200)
     assert(r.backoffFor(2).toMillis == 350) // capped
   }
-
-  test("async writer drains all batches under the in-flight cap with retries") {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
-    val concurrent = new java.util.concurrent.atomic.AtomicInteger
-    val maxSeen = new java.util.concurrent.atomic.AtomicInteger
-    val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val settings = WriterSettings().withMaxInFlight(2).withMaxBuffered(10)
-    val w = new AsyncBatchWriter[Int](batch => {
-      val cur = concurrent.incrementAndGet()
-      maxSeen.accumulateAndGet(cur, Math.max(_, _))
-      try {
-        if (!failedOnce.getAndSet(true)) throw RetryPolicy.RetryableException("first call flakes")
-        Thread.sleep(30)
-        seen.add(batch)
-      } finally concurrent.decrementAndGet()
-    }, settings)
-    (1 to 6).foreach(i => w.submit(Seq(i)))
-    w.close()
-    assert(seen.size() == 6)
-    assert(maxSeen.get() <= 2, s"in-flight exceeded cap: ${maxSeen.get()}")
-    assert(w.metrics.appendRetries >= 1)
-  }
 }
 
 class SinkMetricsConcurrencySpec extends AnyFunSuite {
-  test("async writer counts batches and retries exactly with 8 appends in flight") {
+  test("retry loop counts batches and retries exactly from 8 threads") {
     val batches = 3000
     val flaky = (0 until batches).filter(_ % 7 == 3).toSet
     val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val delivered = new java.util.concurrent.atomic.LongAdder
-    val settings = WriterSettings().withMaxInFlight(8).withMaxBuffered(batches)
-    val w = new AsyncBatchWriter[Int](batch => {
-      val id = batch.head
-      // each flaky batch fails its first attempt, transiently
-      if (flaky(id) && failed.add(id)) throw RetryPolicy.RetryableException(s"flaky $id")
-      delivered.increment()
-    }, settings)
-    (0 until batches).foreach(i => w.submit(Seq(i)))
-    w.close()
+    val metrics = new SinkMetrics
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val appends = (0 until batches).map { id =>
+        pool.submit(new Runnable {
+          override def run(): Unit = {
+            RetryPolicy.withRetries(WriterRetrySettings(), metrics, sleep = _ => ())(() => {
+              // each flaky batch fails its first attempt, transiently
+              if (flaky(id) && failed.add(id)) throw RetryPolicy.RetryableException(s"flaky $id")
+              delivered.increment()
+            })
+            metrics.addBatch(0L)
+          }
+        })
+      }
+      appends.foreach(_.get())
+    } finally pool.shutdown()
     assert(delivered.sum() == batches)
-    assert(w.metrics.batchCount == batches)
-    assert(w.metrics.appendRetries == flaky.size)
+    assert(metrics.batchCount == batches)
+    assert(metrics.appendRetries == flaky.size)
+  }
+}
+
+class RetryBackoffSpec extends AnyFunSuite {
+  private val retry = WriterRetrySettings(initialBackoff = java.time.Duration.ofMillis(100),
+    backoffMultiplier = 2.0, maxBackoff = java.time.Duration.ofMillis(350))
+
+  /** Runs `op` through the retry loop with a sleeper that only records:
+    * each sleep is appended to `events` as `sleep <ms>`. */
+  private def run[T](op: () => T, onRecreate: () => Unit = () => ())(
+      events: scala.collection.mutable.Buffer[String]): T =
+    RetryPolicy.withRetries(retry, sleep = d => events += s"sleep ${d.toMillis}")(op, onRecreate)
+
+  test("transient failures back off 100, 200, then the 350 ms cap") {
+    val events = scala.collection.mutable.Buffer.empty[String]
+    var attempts = 0
+    val r = run(() => {
+      attempts += 1
+      if (attempts <= 3) throw RetryPolicy.RetryableException("transient")
+      42
+    })(events)
+    assert(r == 42 && attempts == 4)
+    assert(events == Seq("sleep 100", "sleep 200", "sleep 350"))
+  }
+
+  test("writer-closed failures back off the same, recreating before each retry") {
+    val events = scala.collection.mutable.Buffer.empty[String]
+    var attempts = 0
+    val r = run(() => {
+      attempts += 1
+      if (attempts <= 3) throw RetryPolicy.WriterClosedException("closed")
+      7
+    }, onRecreate = () => events += "recreate")(events)
+    assert(r == 7 && attempts == 4)
+    assert(events == Seq("recreate", "sleep 100", "recreate", "sleep 200", "recreate", "sleep 350"))
+  }
+
+  test("a fatal error or a first-try success sleeps nothing") {
+    val events = scala.collection.mutable.Buffer.empty[String]
+    intercept[IllegalStateException](run(() => throw new IllegalStateException("fatal"))(events))
+    assert(run(() => 1)(events) == 1)
+    assert(events.isEmpty)
   }
 }
 
@@ -270,16 +290,6 @@ class GraftStreamSinkSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-class AsyncGaugesSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("async writer exposes buffered/in-flight gauges") {
-    val w = new graft.sinks.AsyncBatchWriter[Int](_ => (), graft.sinks.WriterSettings())
-    w.submit(Seq(1)); w.submit(Seq(2))
-    assert(w.bufferedRequests == 2 && w.inFlightRequests == 0)
-    w.close()
-    assert(w.bufferedRequests == 0)
-  }
-}
-
 class WriterPoolSpec extends AnyFunSuite {
   import graft.sinks._
 
@@ -294,12 +304,15 @@ class WriterPoolSpec extends AnyFunSuite {
     override def close(): Unit = closed = true
   }
 
+  /** No backoff time spent in the suite; `RetryBackoffSpec` checks the sleeps. */
+  private def noSleep(d: java.time.Duration): Unit = ()
+
   test("pool reuses one writer per stream and closes all on shutdown") {
     val sunk = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
     val made = scala.collection.mutable.Buffer.empty[FlakyAppender]
     val app = new PooledStreamAppender[Int](s => {
       val w = new FlakyAppender(s, sunk, failFirst = false); made += w; w
-    })
+    }, sleep = noSleep)
     app.append("s1", Seq(1)); app.append("s2", Seq(2)); app.append("s1", Seq(3))
     assert(app.pool.size == 2 && app.pool.createdCount == 2)
     app.close()
@@ -313,7 +326,7 @@ class WriterPoolSpec extends AnyFunSuite {
     val app = new PooledStreamAppender[Int](s => {
       val failFirst = first && s == "hot"; first = false
       new FlakyAppender(s, sunk, failFirst)
-    })
+    }, sleep = noSleep)
     app.append("hot", Seq(7, 8))
     assert(app.pool.recreatedCount == 1)
     assert(app.pool.createdCount == 2) // original + recreated
@@ -447,15 +460,91 @@ class TimeoutClampSpec extends AnyFunSuite {
   }
 }
 
+object MaxRecordSizeSpec {
+  /** Every row either face appended: executors run in this JVM in
+    * local mode. */
+  val appended = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 class MaxRecordSizeSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val limit = 64L
+  /** One partition: a small row, one far over `limit`, another small
+    * one; `maxBatchCount = 1` appends each row as soon as it is
+    * buffered. */
+  private def rows = spark.range(0, 3, 1, 1)
+    .selectExpr("'a' AS k", "id", "IF(id = 1, repeat('x', 200), 'ok') AS v")
+  private val settings = WriterSettings(maxBatchCount = 1, maxAppendBytes = limit)
+
+  /** The write fails with a `RecordTooLargeException` for the big row,
+    * which never reaches the transport; the row before it does. */
+  private def assertRejected(write: => GraftSink.Totals): Unit = {
+    MaxRecordSizeSpec.appended.clear()
+    val failure = intercept[Exception](write)
+    val e = Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case r: RecordTooLargeException => r }
+      .getOrElse(fail(s"no RecordTooLargeException in the cause chain of $failure"))
+    assert(e.size > limit && e.limit == limit)
+    import scala.jdk.CollectionConverters._
+    val sent = MaxRecordSizeSpec.appended.asScala.toSeq
+    assert(sent.exists(_.contains("\"id\":0")) && !sent.exists(_.contains("\"id\":1")), s"sent: $sent")
+  }
+
   test("oversized records are rejected per-record before buffering") {
-    val w = new AsyncBatchWriter[String](_ => (),
-      WriterSettings().withMaxRecordBytes(10), sizeOf = s => s.length.toLong)
-    w.submit(Seq("small"))
-    val e = intercept[RecordTooLargeException] {
-      w.submit(Seq("ok", "a record far larger than ten bytes"))
-    }
-    assert(e.size > 10 && e.limit == 10)
-    w.close()
+    assertRejected(GraftSink.writeAtLeastOnce(rows, TableRef("p", "d", "t"), settings,
+      batch => batch.foreach(r => MaxRecordSizeSpec.appended.add(new String(r, "UTF-8")))))
+  }
+
+  test("the keyed face rejects an oversized record before buffering") {
+    assertRejected(GraftSink.writeKeyedAtLeastOnce(rows, "k", TableRef("p", "d", "t"), settings,
+      _ => new BatchAppender[Array[Byte]] {
+        override def append(batch: Seq[Array[Byte]]): Unit =
+          batch.foreach(r => MaxRecordSizeSpec.appended.add(new String(r, "UTF-8")))
+        override def close(): Unit = ()
+      }))
+  }
+}
+
+class TimeoutResetSpec extends AnyFunSuite {
+  /** Key `a` gets records at t0 and t0 + 300 (timeout 400 ms); the
+    * watermark is then advanced through key `tick`, first to t0 + 500,
+    * then to t0 + 800. Returns `a`'s fired batches after each step. */
+  private def fireTimes(reset: Boolean, name: String): (Seq[graft.streaming.FiredBatch], Seq[graft.streaming.FiredBatch]) = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import graft.streaming.{FiredBatch, TimedRecord}
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TimedRecord]
+    val q = graft.streaming.Streams.timeoutBatcher(mem.toDS(), maxCount = 10,
+        maxBytes = 10000, timeoutMs = 400, resetTimerOnNewRecord = reset)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      val t0 = 1000000L
+      def step(rs: TimedRecord*): Seq[FiredBatch] = {
+        mem.addData(rs: _*)
+        q.processAllAvailable()
+        spark.table(name).as[FiredBatch].collect().filter(_.key == "a").toSeq
+      }
+      step(TimedRecord("a", "r", 10, t0))
+      step(TimedRecord("a", "r", 10, t0 + 300))
+      step(TimedRecord("tick", "r", 1, t0 + 500))
+      val mid = step(TimedRecord("tick", "r", 1, t0 + 510))
+      step(TimedRecord("tick", "r", 1, t0 + 800))
+      val end = step(TimedRecord("tick", "r", 1, t0 + 810))
+      assert(q.exception.isEmpty, s"query died: ${q.exception}")
+      (mid, end)
+    } finally q.stop()
+  }
+
+  test("without reset, a partial batch times out from the first record") {
+    val (mid, end) = fireTimes(reset = false, "treset_off")
+    assert(mid == Seq(graft.streaming.FiredBatch("a", 2, 20, "timeout")), s"at t0+500: $mid")
+    assert(end == mid)
+  }
+
+  test("with reset, each record re-arms the timeout from its own time") {
+    val (mid, end) = fireTimes(reset = true, "treset_on")
+    assert(mid.isEmpty, s"fired before t0+700: $mid")
+    assert(end == Seq(graft.streaming.FiredBatch("a", 2, 20, "timeout")), s"at t0+800: $end")
   }
 }

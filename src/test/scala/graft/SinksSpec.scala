@@ -126,17 +126,19 @@ class WritersSpec extends AnyFunSuite {
   test("at-least-once writer splits oversized batches recursively") {
     val appended = scala.collection.mutable.Buffer[Seq[Int]]()
     val m = new SinkMetrics
-    val w = new AtLeastOnceWriter[Int](appended += _, _ => 10L, maxAppendBytes = 25, metrics = m)
-    w.write(RowBatch.defaultStream((1 to 8).toList, TableRef("p", "d", "t")))
+    GraftSink.splitAppend((1 to 8).toList, (_: Int) => 10L, maxAppendBytes = 25, m)(appended += _)
     assert(appended.forall(b => b.map(_ => 10L).sum <= 25 || b.size == 1))
     assert(appended.flatten.sorted == (1 to 8).toList)
     assert(m.splitBatchCount == 3) // 8 → 4+4 → 2+2+2+2
     assert(m.batchCount == appended.size.toLong)
   }
 
+  /** No backoff time spent in the suite; `RetryBackoffSpec` checks the sleeps. */
+  private def noSleep(d: java.time.Duration): Unit = ()
+
   test("retry policy retries transient failures then succeeds") {
     var attempts = 0
-    val r = RetryPolicy.withRetries(maxRetries = 3)(() => {
+    val r = RetryPolicy.withRetries(WriterRetrySettings(maxRetries = 3), sleep = noSleep)(() => {
       attempts += 1
       if (attempts < 3) throw RetryPolicy.RetryableException("transient")
       42
@@ -146,13 +148,14 @@ class WritersSpec extends AnyFunSuite {
 
   test("retry policy recreates writer on writer-closed and gives up on fatal") {
     var recreated = 0
-    val r = RetryPolicy.withRetries(maxRetries = 2)(() => {
+    val r = RetryPolicy.withRetries(WriterRetrySettings(maxRetries = 2), sleep = noSleep)(() => {
       if (recreated == 0) throw RetryPolicy.WriterClosedException("closed")
       7
     }, onRecreate = () => recreated += 1)
     assert(r == 7 && recreated == 1)
     intercept[IllegalStateException] {
-      RetryPolicy.withRetries(maxRetries = 5)(() => throw new IllegalStateException("fatal"))
+      RetryPolicy.withRetries(WriterRetrySettings(maxRetries = 5), sleep = noSleep)(
+        () => throw new IllegalStateException("fatal"))
     }
   }
 
