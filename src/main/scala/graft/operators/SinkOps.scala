@@ -8,8 +8,8 @@ import graft.sinks.Batcher
 /** Query-shaped views of the sink pipeline (SURVEY.md §2a), driven by
   * the REAL `Batcher.assignBatches` greedy implementation — the
   * count-based assignments are independently cross-checked against a
-  * closed-form row_number oracle in DuckDB, validating the mapPartitions
-  * kernel, not a SQL re-derivation of it.
+  * closed-form row_number oracle in DuckDB, validating the batch
+  * trigger expression, not a SQL re-derivation of it.
   */
 object SinkOps {
 

@@ -1,16 +1,24 @@
 package graft.sinks
 
+import java.nio.CharBuffer
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The JSON-line encoding kernel every sink write face shares: the
-  * at-least-once `JsonRowSerializer` (`Row` → bytes) and the `graft-bq`
-  * task writer (`InternalRow` → line). Callers keep their own value
+  * at-least-once `JsonRowSerializer` (`Row` → chars) and the `graft-bq`
+  * task writer (`InternalRow` → bytes). Callers keep their own value
   * dispatch; field-name prefixes and string escaping live here only.
   *
   * Escaping follows Spark's `to_json`: `"` and `\` get a backslash,
   * `\n`/`\r`/`\t` their short forms, every other char below 0x20 the
   * lowercase `\u00xx` form; everything else (including surrogate pairs)
-  * is copied as is.
+  * is copied as is. The byte form applies the same rule to UTF-8 bytes:
+  * every byte of a multi-byte character is ≥ 0x80, so only ASCII bytes
+  * are ever escaped, and a well-formed `UTF8String` encodes to exactly
+  * the UTF-8 bytes of its decoded, char-escaped `String`.
   */
 object JsonLine {
   private val Hex = "0123456789abcdef".toCharArray
@@ -23,6 +31,16 @@ object JsonLine {
       escapeTo(sb, f.name)
       sb.append("\":").toString
     }
+
+  /** [[fieldPrefixes]] as UTF-8 bytes. A name that cannot be encoded (a
+    * lone surrogate) fails here, as an encoding writer would on it. */
+  def fieldPrefixBytes(schema: StructType): Array[Array[Byte]] =
+    fieldPrefixes(schema).map(utf8)
+
+  private def utf8(s: String): Array[Byte] = {
+    val b = StandardCharsets.UTF_8.newEncoder().encode(CharBuffer.wrap(s))
+    java.util.Arrays.copyOfRange(b.array(), b.position(), b.limit())
+  }
 
   /** Appends `s` escaped, without quotes: clean runs are bulk-copied,
     * only the chars that need escaping are handled one at a time. */
@@ -54,5 +72,122 @@ object JsonLine {
     sb.append('"')
     escapeTo(sb, s)
     sb.append('"')
+  }
+
+  /** Appends `s` as a quoted, escaped JSON string, byte-identical to the
+    * UTF-8 encoding of `quoteTo(sb, s.toString)`. Well-formed UTF-8 —
+    * as the reader's [[graft.sources.GraftBqJson.malformedUtf8]] decides
+    * it, the JDK decoder's rule — is escaped on its bytes; anything else
+    * takes the `toString` path, so malformed sequences become U+FFFD as
+    * they do there, and never reach a committed line. */
+  def quoteTo(out: Bytes, s: UTF8String): Unit = {
+    val n = s.numBytes
+    val raw = out.scratch(n)
+    s.writeToMemory(raw, Platform.BYTE_ARRAY_OFFSET)
+    if (graft.sources.GraftBqJson.malformedUtf8(raw, 0, n) >= 0) {
+      val sb = new java.lang.StringBuilder(n + 2)
+      quoteTo(sb, s.toString)
+      out.append(sb.toString.getBytes(StandardCharsets.UTF_8))
+    } else {
+      out.ensure(6 * n + 2)
+      out.put('"')
+      escapeTo(out, raw, n)
+      out.put('"')
+    }
+  }
+
+  private final val Ones = 0x0101010101010101L
+  private final val HighBits = 0x8080808080808080L
+  private final val Quotes = 0x2222222222222222L
+  private final val Backslashes = 0x5c5c5c5c5c5c5c5cL
+
+  /** Whether the eight bytes of `w` hold one below 0x20, a `"` or a `\`.
+    * `(v - n·0x01..) & ~v & 0x80..` is non-zero iff some byte of `v` is
+    * below n ≤ 0x80 (a byte ≥ 0x80 never counts, and never needs
+    * escaping); n = 1 after an XOR finds a byte equal to the pattern's. */
+  private def needsEscape(w: Long): Boolean = {
+    val q = w ^ Quotes
+    val b = w ^ Backslashes
+    ((((w - 0x20 * Ones) & ~w) | ((q - Ones) & ~q) | ((b - Ones) & ~b)) & HighBits) != 0
+  }
+
+  /** `raw(0 until n)` escaped into `out`, which has room for 6n bytes. */
+  private def escapeTo(out: Bytes, raw: Array[Byte], n: Int): Unit = {
+    var start = 0
+    var i = 0
+    while (i < n) {
+      // eight clean bytes at a time
+      while (i + 8 <= n && !needsEscape(Platform.getLong(raw, Platform.BYTE_ARRAY_OFFSET + i))) i += 8
+      if (i < n) {
+        val c = raw(i)
+        if ((c >= 0 && c < ' ') || c == '"' || c == '\\') {
+          if (i > start) out.put(raw, start, i - start)
+          c match {
+            case '"' => out.put('\\'); out.put('"')
+            case '\\' => out.put('\\'); out.put('\\')
+            case '\n' => out.put('\\'); out.put('n')
+            case '\r' => out.put('\\'); out.put('r')
+            case '\t' => out.put('\\'); out.put('t')
+            case _ =>
+              out.put('\\'); out.put('u'); out.put('0'); out.put('0')
+              out.put(Hex(c >> 4)); out.put(Hex(c & 0xf))
+          }
+          start = i + 1
+        }
+        i += 1
+      }
+    }
+    if (n > start) out.put(raw, start, n - start)
+  }
+
+  /** A growable byte buffer lines are encoded into, reused across rows:
+    * the text so far is `bytes(0 until length)`. The `put`s write
+    * without a bounds check after an `ensure`; the `append`s check. */
+  final class Bytes(initial: Int) {
+    var bytes = new Array[Byte](initial)
+    var length = 0
+    private var raw = new Array[Byte](256)
+
+    def ensure(extra: Int): Unit =
+      if (extra > bytes.length - length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, length + extra))
+
+    /** A scratch array of at least `n` bytes, apart from the text. */
+    private[JsonLine] def scratch(n: Int): Array[Byte] = {
+      if (raw.length < n) raw = new Array[Byte](math.max(n, raw.length * 2))
+      raw
+    }
+
+    private[JsonLine] def put(c: Char): Unit = { bytes(length) = c.toByte; length += 1 }
+    private[JsonLine] def put(b: Array[Byte], off: Int, len: Int): Unit = {
+      System.arraycopy(b, off, bytes, length, len)
+      length += len
+    }
+
+    def append(c: Char): Unit = { ensure(1); put(c) }
+    def append(b: Array[Byte]): Unit = { ensure(b.length); put(b, 0, b.length) }
+
+    /** An ASCII string, such as `Double.toString`'s. */
+    def appendAscii(s: String): Unit = {
+      val n = s.length
+      ensure(n)
+      var i = 0
+      while (i < n) { bytes(length + i) = s.charAt(i).toByte; i += 1 }
+      length += n
+    }
+
+    /** `v` in decimal, as `Long.toString` writes it. */
+    def appendLong(v: Long): Unit = {
+      if (v == Long.MinValue) { appendAscii("-9223372036854775808"); return }
+      ensure(20)
+      var x = v
+      if (x < 0) { put('-'); x = -x }
+      var digits = 1
+      var p = 10L
+      while (digits < 19 && x >= p) { digits += 1; p *= 10 }
+      var i = length + digits
+      length = i
+      do { i -= 1; bytes(i) = ('0' + x % 10).toByte; x /= 10 } while (x != 0)
+    }
   }
 }

@@ -10,35 +10,6 @@ case class TableRef(project: String, dataset: String, table: String) {
   def defaultStream: String = s"$fullPath/streams/_default"
 }
 
-/** model/BigQueryRecord.java analog: user record types that know
-  * their destination table and serialized size. Writers accept either
-  * this or an explicit `sizeOf` function — [[RowBatch.of]] groups a
-  * record sequence into per-table default-stream batches the way the
-  * reference's processor routes records by `getTable()`. */
-trait GraftRecord {
-  def table: TableRef
-  def sizeBytes: Long
-}
-
-/** A batch of rows bound to a (stream, offset, table) — the Spark
-  * re-expression of model/Rows.java. `offset == -1` marks the
-  * at-least-once default stream (Rows.defaultStream). */
-case class RowBatch[A](data: Seq[A], offset: Long, stream: String, table: TableRef) {
-  def updateBatch(newData: Seq[A], newOffset: Long): RowBatch[A] =
-    copy(data = newData, offset = newOffset)
-}
-
-object RowBatch {
-  def defaultStream[A](data: Seq[A], table: TableRef): RowBatch[A] =
-    RowBatch(data, -1L, table.defaultStream, table)
-
-  /** Routes self-describing records into one default-stream batch per
-    * destination table (BigQueryStreamProcessor's per-table grouping). */
-  def of[A <: GraftRecord](records: Seq[A]): Seq[RowBatch[A]] =
-    records.groupBy(_.table).toSeq.sortBy(_._1.fullPath)
-      .map { case (t, rs) => defaultStream(rs, t) }
-}
-
 /** Per-key exactly-once stream bookkeeping, mirroring
   * process/StreamState.java: a named write stream, the next append
   * offset, and a last-update watermark used for TTL-based recreation

@@ -17,6 +17,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write._
@@ -171,6 +172,12 @@ class GraftBqWrite(schema: StructType, path: String, queryId: String,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new GraftBqWriterFactory(schema, path, queryId)
 
+  /** Rows, bytes and files the tasks wrote, summed over tasks into the
+    * write node's SQL metrics (the reference's batch count / batch MB
+    * surface, in Spark's channel). */
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new RowsWrittenMetric, new BytesWrittenMetric, new FilesWrittenMetric)
+
   private def finalizeFiles(tag: String, messages: Array[WriterCommitMessage]): Unit = {
     Files.createDirectories(committedDir)
     val ddl = base.resolve("_schema.ddl")
@@ -242,60 +249,110 @@ class GraftBqWriterFactory(schema: StructType, path: String, queryId: String)
     new GraftBqDataWriter(schema, path, queryId, epochId, partitionId, taskId)
 }
 
-/** Task-side writer: JSON-lines into an attempt-isolated temp file,
-  * encoded through the shared [[graft.sinks.JsonLine]] kernel with one
-  * reused line buffer per task. Non-finite doubles go out as the JSON
-  * strings "NaN"/"Infinity"/"-Infinity" (bare tokens are not JSON);
-  * the reader's `asDouble` parses them back exactly. */
+/** Task-side writer: JSON-lines into an attempt-isolated temp file.
+  * Each row is encoded straight from the `InternalRow` into one reused
+  * byte buffer — field prefixes, ASCII numbers, `UTF8String` bytes
+  * escaped by the shared [[graft.sinks.JsonLine]] kernel — and the
+  * buffer goes to the file through one `OutputStream` whenever it fills.
+  * Non-finite doubles go out as the JSON strings "NaN"/"Infinity"/
+  * "-Infinity" (bare tokens are not JSON); the reader's `asDouble`
+  * parses them back exactly. Rows, bytes and files written are reported
+  * as task metrics ([[GraftBqWrite.supportedCustomMetrics]]). */
 class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
                         epochId: Long, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
+  import GraftBqDataWriter._
   private val tag = if (epochId >= 0) s"e$epochId" else s"q$queryId"
   private val tmp = Paths.get(path).resolve(s".tmp-$tag-p$partitionId-t$taskId.jsonl")
   Files.createDirectories(tmp.getParent)
-  private val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
-    StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+  private val out = Files.newOutputStream(tmp, StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   private var rows = 0L
-  private val prefix = JsonLine.fieldPrefixes(schema)
+  private var flushed = 0L
+  private val prefix = JsonLine.fieldPrefixBytes(schema)
   private val types = schema.fields.map(_.dataType)
-  private val sb = new java.lang.StringBuilder(256)
+  private val line = new JsonLine.Bytes(FlushAt + 4096)
 
   override def write(record: InternalRow): Unit = {
-    sb.setLength(0)
-    sb.append('{')
+    line.append('{')
     var first = true
     var i = 0
     while (i < prefix.length) {
       if (!record.isNullAt(i)) {
-        if (!first) sb.append(',')
+        if (!first) line.append(',')
         first = false
-        sb.append(prefix(i))
+        line.append(prefix(i))
         types(i) match {
-          case LongType | TimestampType => sb.append(record.getLong(i)) // timestamps as micros
-          case IntegerType => sb.append(record.getInt(i))
+          case LongType | TimestampType => line.appendLong(record.getLong(i)) // timestamps as micros
+          case IntegerType => line.appendLong(record.getInt(i))
           case DoubleType =>
             val d = record.getDouble(i)
-            if (java.lang.Double.isFinite(d)) sb.append(d) else sb.append('"').append(d).append('"')
-          case BooleanType => sb.append(record.getBoolean(i))
-          case StringType => JsonLine.quoteTo(sb, record.getUTF8String(i).toString)
+            if (java.lang.Double.isFinite(d)) line.appendAscii(java.lang.Double.toString(d))
+            else { line.append('"'); line.appendAscii(java.lang.Double.toString(d)); line.append('"') }
+          case BooleanType => line.appendAscii(if (record.getBoolean(i)) "true" else "false")
+          case StringType => JsonLine.quoteTo(line, record.getUTF8String(i))
           case other => throw new UnsupportedOperationException(s"graft-bq: $other")
         }
       }
       i += 1
     }
-    out.write(sb.append("}\n").toString)
+    line.append('}')
+    line.append('\n')
     rows += 1
+    if (line.length >= FlushAt) flush()
   }
+
+  private def flush(): Unit = {
+    out.write(line.bytes, 0, line.length)
+    flushed += line.length
+    line.length = 0
+  }
+
+  /** Bytes as the committed file will hold them, buffered ones included;
+    * a task with rows commits exactly one file. */
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    taskMetric(RowsWritten, rows),
+    taskMetric(BytesWritten, flushed + line.length),
+    taskMetric(FilesWritten, if (rows > 0) 1L else 0L))
 
   /** A task that wrote no rows commits no file: an empty file would
     * become a committed data file and a scan task of its own. */
   override def commit(): WriterCommitMessage = {
+    flush()
     out.close()
     if (rows == 0) { Files.deleteIfExists(tmp); FilesCommitMessage(Nil, 0L) }
     else FilesCommitMessage(Seq(tmp.toString), rows)
   }
   override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
   override def close(): Unit = ()
+}
+
+object GraftBqDataWriter {
+  /** The buffer goes to the file once it holds this many bytes. */
+  private final val FlushAt = 64 * 1024
+
+  final val RowsWritten = "rows_written"
+  final val BytesWritten = "bytes_written"
+  final val FilesWritten = "files_written"
+
+  private def taskMetric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+}
+
+/** The write node's summed task metrics (Spark aggregates them through
+  * a fresh instance of each class, so each has its own). */
+class RowsWrittenMetric extends CustomSumMetric {
+  override def name(): String = GraftBqDataWriter.RowsWritten
+  override def description(): String = "rows written"
+}
+class BytesWrittenMetric extends CustomSumMetric {
+  override def name(): String = GraftBqDataWriter.BytesWritten
+  override def description(): String = "bytes written"
+}
+class FilesWrittenMetric extends CustomSumMetric {
+  override def name(): String = GraftBqDataWriter.FilesWritten
+  override def description(): String = "files written"
 }
 
 /** Read side: committed files only, one input partition per file.
@@ -417,7 +474,7 @@ object GraftBqMetrics {
   * no BOM skip and no UTF-16/32 guess (a leading BOM or NUL byte is a
   * parse error, as it was when lines were decoded to `String`s). The
   * mapper reads the values the reader does not take from their tokens. */
-private[sources] object GraftBqJson {
+private[graft] object GraftBqJson {
   private final class Utf8Factory extends JsonFactory {
     override protected def _createParser(data: Array[Byte], offset: Int, len: Int,
                                          ctxt: IOContext): JsonParser = {
@@ -596,7 +653,9 @@ class GraftBqPartitionReader(schema: StructType, file: String, permissive: Boole
     * the correctness authority, and a skipped evaluation only costs the
     * optimization, never a row. Numbers compare by decimal value (a
     * long against an integral literal by `Long.compare`, a double
-    * against a double literal as doubles); strings as
+    * against a double literal as doubles, an infinite double in a
+    * DOUBLE column by its sign; a node with no decimal value is
+    * undecided, so no value throws); strings as
     * UTF8String — Spark's binary code-point order, not Java UTF-16
     * code-unit order, which diverges on supplementary-plane chars. */
   private final class Pred(op: Int, s: Int, lit: Any) {
@@ -611,7 +670,11 @@ class GraftBqPartitionReader(schema: StructType, file: String, permissive: Boole
     private val litUtf8 = lit match { case x: String => UTF8String.fromString(x); case _ => null }
 
     private def cmpNode(v: JsonNode): Int = lit match {
-      case _: java.lang.Number => if (v.isNumber) v.decimalValue().compareTo(litDec) else Undecided
+      case _: java.lang.Number =>
+        // a node with no decimal value (a float past double range read as
+        // ±Infinity outside a DOUBLE column) is left to the residual filter
+        if (!v.isNumber || (v.isFloatingPointNumber && !java.lang.Double.isFinite(v.doubleValue()))) Undecided
+        else v.decimalValue().compareTo(litDec)
       case _: String =>
         if (v.isTextual) Integer.signum(UTF8String.fromString(v.asText()).compareTo(litUtf8)) else Undecided
       case b: java.lang.Boolean => if (v.isBoolean) java.lang.Boolean.compare(v.asBoolean(), b) else Undecided
@@ -628,9 +691,12 @@ class GraftBqPartitionReader(schema: StructType, file: String, permissive: Boole
             else java.math.BigDecimal.valueOf(longs(s)).compareTo(litDec)
           } else if (k == KDouble) {
             // finite doubles order as their decimal strings do (each string
-            // rounds back to its double), and -0.0 equals 0.0 in both
+            // rounds back to its double), and -0.0 equals 0.0 in both; a
+            // float past double range (1e400) parsed to ±Infinity, which
+            // Catalyst orders above or below every finite literal
             val d = doubles(s)
-            if (finiteDouble && java.lang.Double.isFinite(d)) { if (d < litDouble) -1 else if (d > litDouble) 1 else 0 }
+            if (!java.lang.Double.isFinite(d)) { if (d > 0) 1 else if (d < 0) -1 else Undecided }
+            else if (finiteDouble) { if (d < litDouble) -1 else if (d > litDouble) 1 else 0 }
             else java.math.BigDecimal.valueOf(d).compareTo(litDec)
           } else Undecided
         case _: String => if (k == KStr) Integer.signum(row.getUTF8String(s).compareTo(litUtf8)) else Undecided

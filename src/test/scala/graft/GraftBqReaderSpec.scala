@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +21,10 @@ import graft.sources.GraftBqPartitionReader
   * by `Files.lines`, parsed whole by `readTree`, filtered on the tree
   * and coerced with `asLong`/`asInt`/`asDouble`/`asBoolean`/`asText`.
   * The streaming byte reader must agree with it on every valid-UTF-8
-  * file: same rows, same drop count, same throw or no-throw. */
+  * file: same rows, same drop count, same throw or no-throw. A pushed
+  * comparison never throws: a float past double range (`1e400`) reads
+  * as ±Infinity and compares by its sign in a DOUBLE column; elsewhere
+  * it has no decimal value and is left to the residual filter. */
 final class TreeLineReader(schema: StructType, file: String, permissive: Boolean,
                            pushed: Array[Filter]) extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
@@ -35,6 +39,10 @@ final class TreeLineReader(schema: StructType, file: String, permissive: Boolean
     else lit match {
       case n: java.lang.Number =>
         if (!v.isNumber) None
+        else if (v.isFloatingPointNumber && !java.lang.Double.isFinite(v.doubleValue()))
+          // a float past double range: by its sign in a DOUBLE column, undecided elsewhere
+          if (schema.fields.exists(f => f.name == attr && f.dataType == DoubleType)) Some(math.signum(v.doubleValue()).toInt)
+          else None
         else Some(v.decimalValue().compareTo(new java.math.BigDecimal(n.toString)))
       case s: String =>
         if (!v.isTextual) None
@@ -259,6 +267,34 @@ class GraftBqReaderDifferentialSpec extends AnyFunSuite {
     }
   }
 
+  test("a float past double range never fails a pushed filter, in a DOUBLE column or elsewhere") {
+    val text = "{\"id\":1,\"x\":1e400}\n{\"id\":2,\"x\":-1e400}\n{\"id\":3,\"x\":1.5}\n{\"id\":1e400,\"x\":0.5}\n"
+    val all = check(text.getBytes(StandardCharsets.UTF_8), "1e400")
+    assert(all.values.forall(!_.threw))
+    val f = Files.createTempFile("graft-bq-inf", ".jsonl")
+    try {
+      Files.write(f, text.getBytes(StandardCharsets.UTF_8))
+      def ids(filter: Filter, schema: StructType = full): Seq[String] =
+        byteReader(schema, f, permissive = false, Array(filter)).rows.map(_.head)
+      // +Infinity is above and -Infinity below every finite literal
+      assert(ids(GreaterThan("x", 1.0)) == Seq("Long:1", "Long:3"))
+      assert(ids(LessThan("x", 1.0)) == Seq("Long:2", "Long:9223372036854775807"))
+      assert(ids(GreaterThan("x", 1L)) == Seq("Long:1", "Long:3"))
+      // no decimal value outside a DOUBLE column: left to the residual filter
+      assert(ids(GreaterThan("id", 5L)) == Seq("Long:9223372036854775807"))
+      assert(ids(GreaterThan("x", 1.0), pruned) == Seq("Long:1", "Long:2", "Long:3"))
+      val spark = TestSpark.spark
+      import spark.implicits._
+      val dir = Files.createTempDirectory("graft-bq-inf")
+      Seq((0L, 0.0)).toDF("id", "x").write.format("graft-bq").mode("append").option("path", dir.toString).save()
+      val data = Files.list(dir).iterator().asScala.filter(_.toString.endsWith(".jsonl")).next()
+      Files.write(data, text.getBytes(StandardCharsets.UTF_8))
+      val df = spark.read.format("graft-bq").option("path", dir.toString).load()
+      assert(df.filter($"x" > 1.0).as[(Long, Double)].collect().sorted.toSeq ==
+        Seq((1L, Double.PositiveInfinity), (3L, 1.5)))
+    } finally Files.delete(f)
+  }
+
   test("line boundaries: LF, CRLF, lone CR, empty lines, last line without a newline") {
     val cases = Seq("", "\n", "\r", "\r\n", "\n\n", "\r\r\n\n", "{\"id\":1}", "{\"id\":1}\r",
       "{\"id\":1}\r\n{\"id\":2}\r{\"id\":3}\n{\"id\":4}", "\r\n{\"id\":1}\n\r{\"id\":2}\r\r")
@@ -317,7 +353,6 @@ class GraftBqUtf8Spec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-bq-utf8").toString
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name").coalesce(1)
       .write.format("graft-bq").mode("append").option("path", dir).save()
-    import scala.jdk.CollectionConverters._
     val data = Files.list(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".jsonl")).next()
     val lines = Files.readAllLines(data).asScala
     Files.write(data, ascii(lines(0) + "\n") ++ ascii("{\"id\":9,\"name\":\"") ++

@@ -336,22 +336,6 @@ class WriterPoolSpec extends AnyFunSuite {
   }
 }
 
-class GraftRecordSpec extends AnyFunSuite {
-  case class Evt(table: graft.sinks.TableRef, sizeBytes: Long, id: Long)
-      extends graft.sinks.GraftRecord
-
-  test("self-describing records route into one default-stream batch per table") {
-    val t1 = graft.sinks.TableRef("p", "d", "a")
-    val t2 = graft.sinks.TableRef("p", "d", "b")
-    val batches = graft.sinks.RowBatch.of(Seq(
-      Evt(t1, 10, 1), Evt(t2, 20, 2), Evt(t1, 30, 3)))
-    assert(batches.map(_.table) == Seq(t1, t2))
-    assert(batches.head.stream == t1.defaultStream && batches.head.offset == -1L)
-    assert(batches.head.data.map(_.id) == Seq(1L, 3L))
-    assert(batches(1).data.map(_.id) == Seq(2L))
-  }
-}
-
 class KeyedSinkSpec extends AnyFunSuite {
   test("keyed at-least-once routes every row to its key's stream via pooled writers") {
     val spark = TestSpark.spark
