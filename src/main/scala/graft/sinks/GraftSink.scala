@@ -3,21 +3,28 @@ package graft.sinks
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.BinaryType
 
 /** DataFrame-level sink facade: the user-facing assembly of the
   * pipeline the reference builds by hand (batch → serialize → append
-  * with retries/splitting), executed distributed via foreachPartition
-  * with Spark accumulators carrying the reference's metric surface
-  * (metric/BigQueryStreamMetrics.java) back to the driver.
+  * with retries/splitting), executed distributed over the frame's
+  * partitions with Spark accumulators carrying the reference's metric
+  * surface (metric/BigQueryStreamMetrics.java) back to the driver.
   *
-  * Both faces run one per-partition loop. Each row is serialized
-  * (`JsonRowSerializer`), rejected with [[RecordTooLargeException]] if
-  * it is longer than `maxAppendBytes`, and buffered for its write
-  * stream. A buffer that reaches `maxBatchCount` rows or `maxBatchBytes`
-  * bytes is flushed through [[splitAppend]] to the stream's pooled
-  * writer ([[PooledStreamAppender]]), which retries transient failures
-  * and recreates a closed writer, backing off per `settings.retry`.
+  * Both faces run one per-partition loop over the frame's `InternalRow`s
+  * (`queryExecution.toRdd`), under one SQL execution and one Spark job,
+  * as `Dataset.foreachPartition` would run them, but with no `Row`
+  * deserialized. Each row is encoded by [[JsonLine.RowLines]] to the
+  * bytes `JsonRowSerializer` gives its `Row`, rejected with
+  * [[RecordTooLargeException]] if it is longer than `maxAppendBytes`,
+  * and buffered for its write stream. A buffer that reaches
+  * `maxBatchCount` rows or `maxBatchBytes` bytes is flushed through
+  * [[splitAppend]] to the stream's pooled writer
+  * ([[PooledStreamAppender]]), which retries transient failures and
+  * recreates a closed writer, backing off per `settings.retry`.
   */
 object GraftSink {
 
@@ -37,8 +44,8 @@ object GraftSink {
     * append to `transport`. Returns driver-side totals. */
   def writeAtLeastOnce(df: DataFrame, table: TableRef, settings: WriterSettings,
                        transport: Seq[Array[Byte]] => Unit): Totals =
-    // every row has the same key, so every row goes to the one stream
-    write(df, settings, _ => (), _ => table.defaultStream, _ =>
+    // no key column: every row goes to the one stream
+    write(df, settings, -1, _ => table.defaultStream, _ =>
       new BatchAppender[Array[Byte]] {
         override def append(rows: Seq[Array[Byte]]): Unit = transport(rows)
         override def close(): Unit = ()
@@ -48,20 +55,27 @@ object GraftSink {
     * stream through the pooled writer registry — the full reference
     * pipeline (key → stream name, one live writer per stream,
     * recreate-on-closed, per-stream batching, split, retry) distributed
-    * via foreachPartition. `newWriter` builds a stream's transport (a
-    * real deployment opens a gRPC append stream here). */
+    * over the frame's partitions. A key's stream is `<table>/streams/`
+    * plus the `toString` of the key's external value (`null` for a null
+    * key). `newWriter` builds a stream's transport (a real deployment
+    * opens a gRPC append stream here). A binary key column is rejected:
+    * its values are arrays, which neither compare nor print by content. */
   def writeKeyedAtLeastOnce(df: DataFrame, keyCol: String, table: TableRef,
                             settings: WriterSettings,
                             newWriter: String => BatchAppender[Array[Byte]]): Totals = {
     val keyIdx = df.schema.fieldIndex(keyCol)
+    val keyType = df.schema(keyIdx).dataType
+    require(keyType != BinaryType,
+      s"key column `$keyCol` has type ${keyType.sql}: a binary key has no stream name and no equality")
     val streams = s"${table.fullPath}/streams/"
-    write(df, settings, _.get(keyIdx), key => streams + key, newWriter)
+    write(df, settings, keyIdx, key => streams + key, newWriter)
   }
 
-  /** The per-partition loop of both faces. Buffers are keyed by
-    * `keyOf(row)`, so a row costs one map lookup and a stream's name,
-    * `streamOf(key)`, is built once per key. */
-  private def write(df: DataFrame, settings: WriterSettings, keyOf: Row => Any,
+  /** The per-partition loop of both faces. Buffers are keyed by the
+    * external value of column `keyIdx` (one buffer when it is -1), so a
+    * row costs one map lookup and a stream's name, `streamOf(key)`, is
+    * built once per key. */
+  private def write(df: DataFrame, settings: WriterSettings, keyIdx: Int,
                     streamOf: Any => String,
                     newWriter: String => BatchAppender[Array[Byte]]): Totals = {
     val sc = df.sparkSession.sparkContext
@@ -71,9 +85,10 @@ object GraftSink {
     val retries = sc.longAccumulator("graft.sink.retries")
     val rows = sc.longAccumulator("graft.sink.rows")
     val limit = settings.maxAppendBytes
+    val lines = JsonLine.RowLines.of(df)
 
-    df.foreachPartition { (it: Iterator[Row]) =>
-      val serializer = new JsonRowSerializer
+    val perPartition = { (it: Iterator[InternalRow]) =>
+      val encoder = lines.encoder()
       val metrics = new SinkMetrics
       val appender = new PooledStreamAppender[Array[Byte]](newWriter, settings.retry, metrics)
       val bufs = new java.util.HashMap[Any, StreamBuffer]()
@@ -86,10 +101,10 @@ object GraftSink {
       }
       try {
         it.foreach { row =>
-          val payload = serializer.serialize(row)
+          val payload = encoder.encode(row)
           // no split can deliver a record past the append limit
           if (payload.length > limit) throw RecordTooLargeException(payload.length, limit)
-          val key = keyOf(row)
+          val key = if (keyIdx < 0) null else encoder.external(row, keyIdx)
           var b = bufs.get(key)
           if (b == null) { b = new StreamBuffer(streamOf(key)); bufs.put(key, b) }
           b.rows += payload
@@ -102,6 +117,13 @@ object GraftSink {
         splits.add(metrics.splitBatchCount)
         retries.add(metrics.appendRetries)
       } finally appender.close()
+    }
+
+    // one SQL execution of one job, as Dataset.foreachPartition runs it
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("foreachPartition")) {
+      qe.executedPlan.resetMetrics()
+      qe.toRdd.foreachPartition(perPartition)
     }
     Totals(batches.value, bytes.value, splits.value, retries.value, rows.value)
   }

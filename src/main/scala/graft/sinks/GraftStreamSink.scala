@@ -52,14 +52,21 @@ class GraftStreamSink private (guarantee: DeliveryGuarantee.Value,
 
 object GraftStreamSink {
 
-  /** Default transport: one jsonl file per append under `path`. */
+  /** Default transport: one jsonl file per append under `path`, each
+    * payload followed by `\n`. Payloads are written as they are: both
+    * encoders write valid UTF-8. */
   private[sinks] def fileTransport(path: String): Seq[Array[Byte]] => Unit = { batch =>
     val dir = java.nio.file.Paths.get(path)
     java.nio.file.Files.createDirectories(dir)
     val f = dir.resolve(java.util.UUID.randomUUID().toString + ".jsonl")
-    java.nio.file.Files.write(f,
-      batch.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-        .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val file = new Array[Byte](batch.iterator.map(_.length + 1).sum)
+    var at = 0
+    batch.foreach { r =>
+      System.arraycopy(r, 0, file, at, r.length)
+      file(at + r.length) = '\n'
+      at += r.length + 1
+    }
+    java.nio.file.Files.write(f, file)
   }
 
   def newBuilder(): Builder = new Builder()

@@ -23,9 +23,12 @@ class NoOpRowSerializer extends RowValueSerializer[Array[Byte]] {
 
 /** JSON per-row encoding (JsonRowValueSerializer analog): field order
   * follows the schema; nulls omitted like Spark's `to_json`. Names and
-  * strings go through the shared [[JsonLine]] kernel. Thread-safe: each
-  * call builds its own line, and the cached (schema, prefixes) pair is
-  * immutable, so a racing rebuild only costs the rebuild. */
+  * strings go through the shared [[JsonLine]] kernel, and each value's
+  * format is [[JsonLine.valueTo]]'s. The public serializer for `Row`s;
+  * the at-least-once faces encode a frame's `InternalRow`s to the same
+  * bytes through [[JsonLine.RowLines]]. Thread-safe: each call builds its
+  * own line, and the cached (schema, prefixes) pair is immutable, so a
+  * racing rebuild only costs the rebuild. */
 class JsonRowSerializer extends RowValueSerializer[Row] {
   @transient @volatile private var names: (StructType, Array[String]) = _
 
@@ -49,19 +52,7 @@ class JsonRowSerializer extends RowValueSerializer[Row] {
         if (!first) sb.append(',')
         first = false
         sb.append(prefix(i))
-        row.get(i) match {
-          case s: String => JsonLine.quoteTo(sb, s)
-          case l: java.lang.Long => sb.append(l.longValue)
-          case n: java.lang.Integer => sb.append(n.intValue)
-          case b: java.lang.Boolean => sb.append(b.booleanValue)
-          // bare NaN/Infinity tokens are invalid JSON — encode as null
-          case d: java.lang.Double =>
-            if (d.isNaN || d.isInfinite) sb.append("null") else sb.append(d.doubleValue)
-          case f: java.lang.Float =>
-            if (f.isNaN || f.isInfinite) sb.append("null") else sb.append(f.floatValue)
-          case n: java.lang.Number => sb.append(n.toString)
-          case other => JsonLine.quoteTo(sb, other.toString)
-        }
+        JsonLine.valueTo(sb, row.get(i))
       }
       i += 1
     }

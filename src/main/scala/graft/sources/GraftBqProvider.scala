@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReportsSinkMetrics}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -77,9 +77,17 @@ object GraftBqProvider {
   }
 }
 
+/** A `graft-bq` table. As a streaming query's sink it reports, through
+  * `ReportsSinkMetrics` (read into `StreamingQueryProgress.sink.metrics`),
+  * the last epoch this instance committed and that epoch's rows, files
+  * and bytes; a replayed epoch commits nothing and changes none of them. */
 class GraftBqTable(schema: StructType, path: String, permissive: Boolean = false)
-    extends Table with SupportsWrite with SupportsRead {
+    extends Table with SupportsWrite with SupportsRead with ReportsSinkMetrics {
   require(path != null, "graft-bq requires a 'path' option")
+
+  @volatile private var lastEpoch: util.Map[String, String] = util.Collections.emptyMap()
+
+  override def metrics(): util.Map[String, String] = lastEpoch
 
   override def name(): String = s"graft-bq:$path"
   override def schema(): StructType = schema
@@ -93,7 +101,8 @@ class GraftBqTable(schema: StructType, path: String, permissive: Boolean = false
       private var truncateRequested = false
       override def truncate(): WriteBuilder = { truncateRequested = true; this }
       override def build(): Write =
-        new GraftBqWrite(schema, path, info.queryId(), truncateRequested)
+        new GraftBqWrite(schema, path, info.queryId(), truncateRequested,
+          (epochId, files) => lastEpoch = GraftBqWrite.epochMetrics(epochId, files))
     }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -152,11 +161,17 @@ class GraftBqScanBuilder(fullSchema: StructType, path: String, permissive: Boole
     new GraftBqScan(requiredSchema, path, permissive, pushed)
 }
 
-/** Commit message: the temp files this task produced. */
-case class FilesCommitMessage(tempFiles: Seq[String], rows: Long) extends WriterCommitMessage
+/** Commit message: the temp files this task produced, their rows and
+  * their bytes. */
+case class FilesCommitMessage(tempFiles: Seq[String], rows: Long, bytes: Long = 0L)
+  extends WriterCommitMessage
 
+/** The batch and streaming write. `onEpochCommit` sees each streaming
+  * epoch this write commits, with its tasks' messages; a replayed epoch
+  * is not committed again and is not passed. */
 class GraftBqWrite(schema: StructType, path: String, queryId: String,
-                   truncateOnCommit: Boolean = false)
+                   truncateOnCommit: Boolean = false,
+                   onEpochCommit: (Long, Seq[FilesCommitMessage]) => Unit = (_, _) => ())
     extends Write with BatchWrite with StreamingWrite {
 
   override def toBatch: BatchWrite = this
@@ -226,7 +241,10 @@ class GraftBqWrite(schema: StructType, path: String, queryId: String,
       Files.list(committedDir).iterator().asScala
         .exists(_.getFileName.toString.endsWith(s"-epoch-$epochId"))
     if (replayed) dropTempFiles(messages)
-    else finalizeFiles(s"epoch-$epochId", messages)
+    else {
+      finalizeFiles(s"epoch-$epochId", messages)
+      onEpochCommit(epochId, messages.toSeq.collect { case m: FilesCommitMessage => m })
+    }
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     dropTempFiles(messages)
@@ -239,6 +257,14 @@ object GraftBqWrite {
     * a single high-water-mark name instead of the full seen-set. */
   private[sources] def monotoneName(tag: String): String =
     f"${System.currentTimeMillis()}%014d-${seq.incrementAndGet()}%06d-$tag"
+
+  /** The sink metrics of committed epoch `epochId`, written by `files`. */
+  private[sources] def epochMetrics(epochId: Long, files: Seq[FilesCommitMessage]): util.Map[String, String] =
+    Map("committed_epoch" -> epochId,
+      GraftBqDataWriter.RowsWritten -> files.map(_.rows).sum,
+      GraftBqDataWriter.FilesWritten -> files.map(_.tempFiles.size.toLong).sum,
+      GraftBqDataWriter.BytesWritten -> files.map(_.bytes).sum)
+      .map { case (k, v) => k -> v.toString }.asJava
 }
 
 class GraftBqWriterFactory(schema: StructType, path: String, queryId: String)
@@ -320,7 +346,7 @@ class GraftBqDataWriter(schema: StructType, path: String, queryId: String,
     flush()
     out.close()
     if (rows == 0) { Files.deleteIfExists(tmp); FilesCommitMessage(Nil, 0L) }
-    else FilesCommitMessage(Seq(tmp.toString), rows)
+    else FilesCommitMessage(Seq(tmp.toString), rows, flushed)
   }
   override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
   override def close(): Unit = ()
