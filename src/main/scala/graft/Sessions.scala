@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local-session builder for every runnable main (Bench, Verify,
-  * Probe, KernelDelta, ClustersDelta): the oracle compare depends on
-  * some of these confs (UTC timestamps), and the bench artifact on
-  * others (cpus = shuffle partitions — the driver measures at 32), so
-  * four hand-copied builder blocks drifting independently is how the
-  * round-3 "measured under different parallelism than the driver"
-  * drift happened. Explain keeps its own deliberately tiny session
-  * (plan dumps, not measurements). */
+/** One local-session builder for the measuring mains (Bench,
+  * BenchOne, Verify): the oracle compare depends on some of these
+  * confs (UTC timestamps), and the bench artifact on others (cpus =
+  * shuffle partitions — the driver measures at 32), so hand-copied
+  * builder blocks drifting independently is how the round-3 "measured
+  * under different parallelism than the driver" drift happened.
+  * Explain keeps its own deliberately tiny session (plan dumps, not
+  * measurements). */
 object Sessions {
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

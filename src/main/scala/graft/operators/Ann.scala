@@ -687,7 +687,7 @@ object Ann {
     // value and only the desc-downward-closed candidate superset
     // (~1/pctDen of the corpus + one bucket) is ranked — identical
     // ranks for every kept row by construction. Interleaved same-JVM
-    // A/B (OutlierDelta): window 0.58 s vs cut 0.99 s at sf0.1's 2k
+    // A/B: window 0.58 s vs cut 0.99 s at sf0.1's 2k
     // vectors — the cut's extra stages only pay for themselves once
     // the corpus dwarfs them, hence the branch, not a constant.
     // n rides the branch as an eager count, so the target rank is a
@@ -1501,27 +1501,24 @@ object Ann {
     // per hop; measured 4.96 s at sf0.1 for a queries×beam×(degree+1)
     // row working set). The checkpoint pins the hop's ≤ queries·beam
     // rows and keeps every hop's plan flat and constant-size.
-    // -Dgraft.beam.ckpt=false pins the unbroken-lineage shape (the
-    // BeamDelta A/B harness flips this to measure the win in one JVM).
-    val ckptHops = !"false".equals(System.getProperty("graft.beam.ckpt"))
-    def pin(df: DataFrame): DataFrame =
-      if (ckptHops) df.localCheckpoint(true) else df
-    var frontier = pin(qs.join(entries, Seq("b0"), "left")
+    var frontier = qs.join(entries, Seq("b0"), "left")
       .crossJoin(broadcast(globalEntry))
-      .select(col("q_id"), coalesce(col("entry"), col("global_entry")).as("vec_id")))
+      .select(col("q_id"), coalesce(col("entry"), col("global_entry")).as("vec_id"))
+      .localCheckpoint(true)
     for (_ <- 1 to hops) {
       val expanded = frontier.unionByName(
           frontier.join(adj, frontier("vec_id") === adj("node"))
             .select(col("q_id"), col("nbr").as("vec_id")))
         .distinct()
-      frontier = pin(emb.join(broadcast(expanded), "vec_id")
+      frontier = emb.join(broadcast(expanded), "vec_id")
         .join(broadcast(qvecs), "q_id")
         .select(col("q_id"), col("vec_id"),
           simBp(col("q_vec"), col("embedding")).as("s"))
         .groupBy(col("q_id"))
         .agg(F.topk(col("s").cast("double"), col("vec_id"), beam).as("f"))
         .select(col("q_id"), explode(col("f")))
-        .select(col("q_id"), col("col.id").as("vec_id")))
+        .select(col("q_id"), col("col.id").as("vec_id"))
+        .localCheckpoint(true)
     }
     emb.join(broadcast(frontier.filter(col("vec_id") =!= col("q_id"))), "vec_id")
       .join(broadcast(qvecs), "q_id")

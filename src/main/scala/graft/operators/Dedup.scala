@@ -39,8 +39,7 @@ object Dedup {
     * `catalog.clearCache()`) between runs, else disk-backed blocks
     * accumulate for the session. */
   private[operators] def materialized(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_NO_MATERIALIZE").contains("true")) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Word 3-gram shingles (falls back to whole text when too short). */
   private[operators] def shingles(k: Int = 3): Column =
@@ -616,8 +615,8 @@ object Dedup {
     // real cluster) — but round state here is edge-scale, and tiny
     // rounds spread over many near-empty tasks pay scheduler overhead
     // per round instead of doing work (measured: the same sf0.1 query
-    // swings 1.5-6 s at 32 partitions purely on task dispatch;
-    // ClustersDelta pins the win at ~30% with interleaved arms). One
+    // swings 1.5-6 s at 32 partitions purely on task dispatch; an
+    // interleaved same-JVM A/B put the win at ~30%). One
     // partition per ~2M edges, clamped to the session setting — the
     // same rule that picks 32 at sf0.1 picks thousands at 100 TB. The
     // count is one cheap job over the already-checkpointed edges.
@@ -633,11 +632,8 @@ object Dedup {
     // simply skips the clamp.
     val sessionParts = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toLong).getOrElse(Long.MaxValue)
-    // -Dgraft.clusters.autosize=false pins the session setting (the
-    // ClustersDelta A/B harness flips this to measure the sizing win)
-    val autosize = !"false".equals(System.getProperty("graft.clusters.autosize"))
     val target = math.max(1L, math.min(sessionParts, edges.count() / 2000000L + 1L))
-    val loop = if (autosize && target < sessionParts) {
+    val loop = if (target < sessionParts) {
       val s = spark.newSession()
       // newSession() derives SQLConf from SparkConf DEFAULTS, not the
       // caller's runtime session — copy the caller's modified entries

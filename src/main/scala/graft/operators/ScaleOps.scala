@@ -2070,8 +2070,9 @@ object ScaleOps {
   /** Merged Misra–Gries summary of a frame as (tok, cnt) rows plus the
     * NULL-tok total marker — ONE `graft_mg` aggregate (native map-side
     * partials, ≤ s+1 rows out vs the mapPartitions kernel's
-    * partitions·(s+1); MgProbe measured the aggregate two-pass 4.6×
-    * faster than the kernel and 2.7× faster than the naive groupBy).
+    * partitions·(s+1); on 20M rows over a 5M-key domain the aggregate
+    * two-pass measured 4.6× faster than the kernel and 2.7× faster than
+    * the naive groupBy).
     * Partial-merge order varies run to run, so the summary's COUNTER
     * values are not replay-deterministic — fine for the batch
     * operators (the exact second pass immunizes the output; the

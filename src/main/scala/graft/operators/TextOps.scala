@@ -626,16 +626,12 @@ object TextOps {
     * nested aggregate-folds deep, and the final table's lineage rides
     * into every downstream read (the tokenizer_apply encode join
     * re-analyzes the whole merge history per reference). Interleaved
-    * same-JVM A/B (BpeDelta): tokenizer_apply 3.40→2.92 s at sf0.1
+    * same-JVM A/B against persist: tokenizer_apply 3.40→2.92 s at sf0.1
     * (−14%), tokenizer_bpe 2.81→2.72 s (noise-level) — the win is the
     * flat plan under the downstream reads. At the batched trainer's
     * production shape (32k merges / B=256 ⇒ 128 rounds) the unbroken
-    * lineage would be an analysis-time blowup, not a nicety.
-    * -Dgraft.bpe.ckpt=false pins the persist shape for the harness. */
-  private def pinRound(df: DataFrame): DataFrame =
-    if (!"false".equals(System.getProperty("graft.bpe.ckpt")))
-      df.localCheckpoint(true)
-    else df.persist()
+    * lineage would be an analysis-time blowup, not a nicety. */
+  private def pinRound(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The adjacent-pair count table of a word/symbol frame — shared by
     * the sequential and batched BPE trainers. */
@@ -1348,9 +1344,11 @@ object TextOps {
     * total instead of the previous 32 corpus-frame passes. Both arms
     * replay the identical integer recurrence (Scala Long `/` and
     * Spark `div` both truncate toward zero) and are spec-asserted
-    * equal. Overflow parity: a driver/Spark gradient term saturates
-    * only past ~9·10⁹ corpus rows in one group — the same 2⁶³ budget
-    * the previous row-grain sum had. */
+    * equal (`QualityTrainSpec`), null-text documents included: they
+    * count in N and add no gradient on either arm. Overflow parity: a
+    * driver/Spark gradient term saturates only past ~9·10⁹ corpus rows
+    * in one group — the same 2⁶³ budget the previous row-grain sum
+    * had. */
   def textQualityTrain(documents: DataFrame, iters: Int = 32,
                        lrDen: Long = 40L, histCollectMax: Int = 1 << 20): DataFrame = {
     val spark = documents.sparkSession
@@ -1364,11 +1362,14 @@ object TextOps {
       val w =
         if (nGroups <= histCollectMax) {
           // Driver arm: collect the bounded histogram, iterate locally.
-          val rows = hist.select("x0", "x1", "x2", "x3", "x4", "y", "cnt")
+          // A group with a null feature (a null text) has a null error
+          // term: it counts in n but adds no gradient, as the Spark
+          // arm's sum and the oracle's count(*)/sum treat it.
+          val groups = hist.select("x0", "x1", "x2", "x3", "x4", "y", "cnt")
             .collect()
-            .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-          val n = rows.iterator.map(_(6)).sum
+          val n = groups.iterator.map(_.getLong(6)).sum
+          val rows = groups.filterNot(r => (0 to 5).exists(r.isNullAt))
+            .map(r => Array.tabulate(7)(r.getLong))
           val w = Array.fill(5)(0L)
           for (_ <- 1 to iters) {
             val g = Array.fill(5)(0L)

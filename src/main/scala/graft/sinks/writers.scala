@@ -123,7 +123,8 @@ class PooledStreamAppender[A](newWriter: String => BatchAppender[A],
   * re-append. We write each epoch under an epoch-scoped directory and
   * atomically record it in a commit ledger; replays of committed epochs
   * are no-ops (idempotent 2-phase commit). Offsets in the ledger are
-  * monotone, mirroring StreamState.offset.
+  * monotone, like the reference's per-stream append offset
+  * (process/StreamState.java; here `Streams.assignOffsets`).
   */
 class ExactlyOnceParquetSink(basePath: String) extends Serializable {
   private def ledgerDir: Path = Paths.get(basePath, "_graft_commits")

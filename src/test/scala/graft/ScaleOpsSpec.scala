@@ -2101,6 +2101,25 @@ class QualityTrainSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(cleanKept >= 38, s"trained filter keeps clean docs: $cleanKept/40")
     assert(junkKept <= 2, s"trained filter rejects planted junk: $junkKept/40")
   }
+
+  test("driver and Spark training arms return identical weights, a null-text doc included") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val stops = Seq("the", "a", "of", "and", "to", "in", "is")
+    val docs = ((0 until 60).map { i =>
+      val len = 4 + rnd.nextInt(70)
+      (i.toLong, Option((0 until len).map(_ =>
+        if (rnd.nextInt(4) == 0) stops(rnd.nextInt(stops.size))
+        else s"w${rnd.nextInt(300)}").mkString(" ")))
+    } :+ ((999L, Option.empty[String]))).toDF("doc_id", "text")
+    def weights(histCollectMax: Int) = graft.operators.TextOps
+      .textQualityTrain(docs, histCollectMax = histCollectMax)
+      .collect().map(r => (r.getString(1), r.getLong(2))).toSeq
+    val driver = weights(1 << 20)
+    assert(driver == weights(0), "histCollectMax = 0 forces the Spark arm")
+    assert(driver.exists(_._2 != 0L), s"training must move the weights: $driver")
+  }
 }
 
 class QualityScoreStreamSpec extends org.scalatest.funsuite.AnyFunSuite {

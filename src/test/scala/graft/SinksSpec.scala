@@ -146,12 +146,4 @@ class WritersSpec extends AnyFunSuite {
         () => throw new IllegalStateException("fatal"))
     }
   }
-
-  test("stream state TTL expiry matches reference semantics") {
-    val day = 24L * 60 * 60 * 1000
-    val st = StreamState("s", 10, lastUpdateMillis = 0)
-    assert(!st.expired(7, 7 * day - 1))
-    assert(st.expired(7, 7 * day))
-    assert(st.advance(5, 123).offset == 15)
-  }
 }
