@@ -146,4 +146,22 @@ class WritersSpec extends AnyFunSuite {
         () => throw new IllegalStateException("fatal"))
     }
   }
+
+  test("stream state TTL expiry matches reference semantics") {
+    import spark.implicits._
+    import graft.streaming.{KeyedBatch, Streams}
+    val day = 24L * 60 * 60 * 1000
+    // the TTL boundary is inclusive: exactly 7 days after the last update
+    // starts a new stream at offset 0, 1 ms earlier appends at the tracked offset
+    val batches = Seq(
+      KeyedBatch("live", 10, 0), KeyedBatch("live", 5, 7 * day - 1),
+      KeyedBatch("expired", 10, 0), KeyedBatch("expired", 5, 7 * day)).toDS()
+    val got = Streams.assignOffsets(batches, ttlDays = 7).collect()
+      .map(a => (a.key, a.stream, a.offsetStart, a.n, a.recreated)).sortBy(a => (a._1, a._2, a._3)).toSeq
+    assert(got == Seq(
+      ("expired", "expired/streams/0", 0L, 10L, true),
+      ("expired", "expired/streams/1", 0L, 5L, true),
+      ("live", "live/streams/0", 0L, 10L, true),
+      ("live", "live/streams/0", 10L, 5L, false)))
+  }
 }

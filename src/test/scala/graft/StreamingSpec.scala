@@ -78,11 +78,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[KeyedBatch]
     val q = Streams.assignOffsets(mem.toDS(), ttlDays = 7)
       .writeStream.format("memory").queryName("offsets").outputMode("append").start()
-    // the TTL boundary is inclusive: exactly 7 days after the last
-    // update starts a new stream (t4), 1 ms earlier does not (t3)
-    mem.addData(KeyedBatch("t1", 10, 0), KeyedBatch("t2", 3, 0),
-      KeyedBatch("t3", 4, 0), KeyedBatch("t3", 1, 7 * day - 1),
-      KeyedBatch("t4", 4, 0), KeyedBatch("t4", 1, 7 * day))
+    mem.addData(KeyedBatch("t1", 10, 0), KeyedBatch("t2", 3, 0))
     q.processAllAvailable()
     mem.addData(KeyedBatch("t1", 5, day))
     q.processAllAvailable()
@@ -94,10 +90,6 @@ class StreamingSpec extends AnyFunSuite {
     val byStream = out.filter(_.key == "t1").groupBy(_.stream)
     assert(byStream("t1/streams/0").map(a => (a.offsetStart, a.n)).sortBy(_._1).toSeq == Seq((0L, 10L), (10L, 5L)))
     assert(byStream("t1/streams/1").map(a => (a.offsetStart, a.n, a.recreated)).toSeq == Seq((0L, 2L, true)))
-    def trail(key: String) = out.filter(_.key == key).sortBy(a => (a.stream, a.offsetStart))
-      .map(a => (a.stream, a.offsetStart, a.n, a.recreated)).toSeq
-    assert(trail("t3") == Seq(("t3/streams/0", 0L, 4L, true), ("t3/streams/0", 4L, 1L, false)))
-    assert(trail("t4") == Seq(("t4/streams/0", 0L, 4L, true), ("t4/streams/1", 0L, 1L, true)))
     q.stop()
   }
 }
